@@ -11,22 +11,19 @@ leave to AQE's ``advisoryPartitionSizeInBytes``).
 from __future__ import annotations
 
 import os
+import re
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
+# the heap measured best for this workload at local[32]: an oversized
+# heap measurably HURTS on this kernel (longer GC scans + page-zeroing
+# sys time), the 1g JVM default GC-thrashes under 32 executor threads
+MAX_DRIVER_HEAP_MIB = 8 * 1024
+
+_UNIT_MIB = {"m": 1, "g": 1024, "t": 1024 ** 2}
+
 DEFAULT_CONFS = {
-    # local[32]: the 1g JVM default GC-thrashes under 32 executor
-    # threads, but an oversized heap measurably HURTS on this kernel
-    # (longer GC scans + page-zeroing sys time) — 8g is the sweet spot
-    # measured for this workload
-    "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
-    "spark.driver.maxResultSize": "4g",
-    # -Xms=-Xmx + pre-touch: dynamic heap growth on this kernel spends
-    # whole seconds in page-zeroing system time mid-job (measured: a
-    # 32-core run degraded 6s → 110s without it; stable 6s with it)
-    "spark.driver.extraJavaOptions": (
-        f"-Xms{os.environ.get('SPARK_DRIVER_MEMORY', '8g')} "
-        "-XX:+AlwaysPreTouch -XX:+UseG1GC"),
     # JVM↔Python Arrow traffic over Unix domain sockets: loopback TCP
     # on this sandbox kernel costs ~0.7 core-sec of system time per MB
     # (measured); UDS cuts it ~3×. Harmless on real clusters.
@@ -55,6 +52,56 @@ DEFAULT_CONFS = {
 }
 
 
+def _heap_mib(size: str) -> int:
+    """Whole MiB in a Spark/JVM memory string ("8g", "3584m"; no unit
+    means MiB, as Spark reads ``spark.driver.memory``)."""
+    m = re.fullmatch(r"(\d+)(?:([mgt])b?)?", size.strip(), re.IGNORECASE)
+    if not m:
+        raise ValueError(f"not a driver heap size: {size!r}")
+    return int(m[1]) * _UNIT_MIB[(m[2] or "m").lower()]
+
+
+def host_heap(ram_bytes: int | None = None) -> str:
+    """Driver heap sized to the host: min(8g, physical RAM / 4).
+
+    The heap is pre-touched, so all of it is resident from start-up.
+    A quarter of RAM leaves room for a second session (a test run and
+    the CLI subprocess it starts) plus both sessions' Python workers.
+    """
+    if ram_bytes is None:
+        ram_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(MAX_DRIVER_HEAP_MIB, ram_bytes // 4 // 2 ** 20)}m"
+
+
+def session_confs(extra_confs: dict | None = None,
+                  env: Mapping[str, str] = os.environ,
+                  ram_bytes: int | None = None) -> dict:
+    """Every conf ``get_spark`` sets except the shuffle partitions.
+
+    The driver heap is ``spark.driver.memory`` from ``extra_confs``,
+    else ``SPARK_DRIVER_MEMORY``, else :func:`host_heap`; ``-Xms`` and
+    ``maxResultSize`` follow that final value.
+    """
+    extra_confs = extra_confs or {}
+    heap = extra_confs.get("spark.driver.memory",
+                           env.get("SPARK_DRIVER_MEMORY") or host_heap(ram_bytes))
+    mib = _heap_mib(heap)
+    return {
+        "spark.driver.memory": heap,
+        # half the heap: a cap at or above the heap could never fire
+        # before the driver itself runs out of memory
+        "spark.driver.maxResultSize": f"{mib // 2}m",
+        # -Xms=-Xmx + pre-touch: dynamic heap growth on this kernel
+        # spends whole seconds in page-zeroing system time mid-job
+        # (measured: a 32-core run degraded 6s → 110s without it;
+        # stable 6s with it)
+        "spark.driver.extraJavaOptions": (
+            f"-Xms{mib}m -XX:+AlwaysPreTouch -XX:+UseG1GC"),
+        **DEFAULT_CONFS,
+        **extra_confs,
+    }
+
+
 def get_spark(app_name: str = "paperslicer_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
@@ -64,8 +111,6 @@ def get_spark(app_name: str = "paperslicer_spark",
     if master is None:
         master = f"local[{cpus}]" if cpus else "local[*]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    for k, v in DEFAULT_CONFS.items():
-        builder = builder.config(k, v)
     if shuffle_partitions is None:
         try:
             n = int(master.split("[", 1)[1].rstrip("]").replace("*", "0")) or os.cpu_count()
@@ -73,6 +118,6 @@ def get_spark(app_name: str = "paperslicer_spark",
             n = os.cpu_count() or 8
         shuffle_partitions = max(2 * n, 8)
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    for k, v in (extra_confs or {}).items():
+    for k, v in session_confs(extra_confs).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

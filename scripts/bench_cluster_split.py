@@ -44,10 +44,6 @@ MODES = {
 
 def worker(mode: str) -> None:
     master, conf = MODES[mode]
-    # MUST precede the session import: DEFAULT_CONFS reads this env at
-    # module-import time to align -Xms with spark.driver.memory
-    os.environ["SPARK_DRIVER_MEMORY"] = conf.get("spark.driver.memory",
-                                                 "8g")
 
     from pyspark.sql import functions as F
 

@@ -1,8 +1,15 @@
 """Curation operators: connected-components dup clustering,
 Gopher-style quality rules, deterministic stratified sampling."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# CLI subprocesses start their own JVM beside the test session's: an
+# explicit small heap keeps both resident sets within the host's RAM
+CLI_ENV = {**os.environ, "SPARK_DRIVER_MEMORY": "1g"}
 
 
 def _cc(spark, pairs, **kw):
@@ -172,14 +179,16 @@ def test_run_curate_cli_and_resume(tmp_path):
     cmd = [sys.executable, "scripts/run_curate.py",
            "--input", "/root/testdata/sf0.001/documents.parquet",
            "--output", str(out)]
-    r1 = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo")
+    r1 = subprocess.run(cmd, capture_output=True, text=True,
+                        cwd=REPO, env=CLI_ENV)
     assert r1.returncode == 0, r1.stderr[-2000:]
     line1 = [ln for ln in r1.stdout.splitlines()
              if ln.startswith("curation:")][0]
     assert "'ran': ['quality', 'clusters', 'keep', 'chunks']" in line1
     for sub in ("quality", "clusters", "keep", "chunks", "metrics"):
         assert (out / sub / "_SUCCESS").exists()
-    r2 = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo")
+    r2 = subprocess.run(cmd, capture_output=True, text=True,
+                        cwd=REPO, env=CLI_ENV)
     assert r2.returncode == 0, r2.stderr[-2000:]
     line2 = [ln for ln in r2.stdout.splitlines()
              if ln.startswith("curation:")][0]
@@ -536,7 +545,8 @@ def test_run_curate_scrub_and_decontaminate_stages(tmp_path):
            "--input", "/root/testdata/sf0.001/documents.parquet",
            "--output", str(out), "--scrub-pii",
            "--bench-input", "/root/testdata/sf0.01/documents.parquet"]
-    r1 = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo")
+    r1 = subprocess.run(cmd, capture_output=True, text=True,
+                        cwd=REPO, env=CLI_ENV)
     assert r1.returncode == 0, r1.stderr[-2000:]
     line1 = [ln for ln in r1.stdout.splitlines() if "curation:" in ln][-1]
     assert "'ran': ['scrub', 'decontaminate', 'quality'" in line1
@@ -548,7 +558,8 @@ def test_run_curate_scrub_and_decontaminate_stages(tmp_path):
         f"select count(*) n from '{out}/decontaminated/*.parquet'"
     ).df()["n"][0]
     assert 0 < n_dec < n_in
-    r2 = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo")
+    r2 = subprocess.run(cmd, capture_output=True, text=True,
+                        cwd=REPO, env=CLI_ENV)
     line2 = [ln for ln in r2.stdout.splitlines() if "curation:" in ln][-1]
     assert "'ran': []" in line2 and "'skipped': ['scrub', 'decontaminate'" in line2
 
