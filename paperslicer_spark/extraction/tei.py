@@ -106,7 +106,7 @@ class _Doc:
     sees the identical document."""
 
     __slots__ = ("root", "_parent", "_order", "_pb_pos", "_pb_page",
-                 "_zones", "_has_pb", "_zone_surface")
+                 "_has_pb", "_zone_surface")
 
     def __init__(self, root: ET.Element):
         self.root = root
@@ -114,7 +114,6 @@ class _Doc:
         self._order: Optional[Dict[int, int]] = None
         self._pb_pos: Optional[List[int]] = None
         self._pb_page: Optional[List[Optional[int]]] = None
-        self._zones: Optional[Dict[str, ET.Element]] = None
         self._has_pb: Optional[bool] = None
         self._zone_surface: Optional[
             Dict[str, tuple[ET.Element, ET.Element]]] = None
@@ -168,16 +167,6 @@ class _Doc:
         if k < 0:
             return None
         return self._pb_page[k]
-
-    def zone(self, zone_id: str) -> Optional[ET.Element]:
-        if self._zones is None:
-            zs: Dict[str, ET.Element] = {}
-            for z in self.root.iter(T_ZONE):
-                zid = z.get(XML_ID)
-                if zid:
-                    zs.setdefault(zid, z)
-            self._zones = zs
-        return self._zones.get(zone_id)
 
     def zone_in_parent(self, zone_id: str
                        ) -> Optional[tuple[ET.Element,

@@ -7,20 +7,27 @@ review profile) per document, so there is exactly one
 JVM↔Python/Arrow boundary on the hot path (SURVEY.md §4.6).
 
 Error model mirrors the reference's per-document try/except
-(``project.py:57-62``): failures become ``status='error'`` rows, never
-task failures — at 10^12-turn scale one malformed payload must not
-kill a stage.
+(``project.py:57-62``) and lives in ONE function, ``extract_document``:
+a payload that fails to parse, merge or review yields the error text
+``"{Type}: {msg}"``. ``iter_conversations`` is the one walk over
+conv_id-sorted turns; a conversation over ``max_turns_per_conv`` gets
+``"oversized: > N turns"``. Every path — the records and sections
+emitters here, the streaming assembler — turns that text into a
+``status='error'`` row (sections: an ``__error__`` row), never a task
+failure: at 10^12-turn scale one malformed payload must not kill a
+stage.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Iterable, Iterator, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
 from paperslicer_spark.extraction.merge import merge_table_entries
 from paperslicer_spark.extraction.review import apply_review, should_apply
 from paperslicer_spark.extraction.tei import parse_tei
+from paperslicer_spark.sources.transcripts import assemble_payload
 
 RECORD_SCHEMA = (
     "conv_id string, status string, error string, "
@@ -34,14 +41,9 @@ RECORD_SCHEMA = (
     "references array<struct<index:int,text:string,id:string,title:string,doi:string,year:string,authors:array<string>>>"
 )
 
-_EMPTY = {
-    "title": None, "journal": None, "doi": None, "authors": [],
-    "keywords": [], "sections": {}, "other_sections": [],
-    "figures": [], "tables": [], "references": [],
-}
-
-
 def _flatten(conv_id: str, rec: dict) -> dict:
+    """One RECORD_SCHEMA row; ``_flatten(conv_id, {})`` has every field
+    empty, the shape of an error row."""
     meta = rec.get("meta") or {}
     return {
         "conv_id": conv_id,
@@ -86,52 +88,126 @@ _COLS = ["conv_id", "status", "error", "title", "journal", "doi",
          "authors", "keywords", "sections", "other_sections",
          "figures", "tables", "references"]
 
-# "no conversation open yet" sentinel for the fused group-detection
-# loops. It must be distinct from None: the agg path's groupBy keeps a
-# NULL conv_id as a real group, so a genuine null key has to open and
-# close a group here too — `state["conv"] is None` would silently drop
-# every null-keyed turn (None != None is False, the group never opens).
+# rows per output batch of the records / sections emitters
+_RECORD_FLUSH = 512
+_SECTION_FLUSH = 4096
+
+# "no conversation open yet" sentinel for iter_conversations. It must
+# be distinct from None: the agg path's groupBy keeps a NULL conv_id as
+# a real group, so a genuine null key has to open and close a group
+# here too — `conv is None` would silently drop every null-keyed turn
+# (None != None is False, the group never opens).
 _UNSET = object()
 
 
-def _build_row(conv_id: str, payload: str, merge_tables: bool,
-               review_mode: Optional[bool]) -> dict:
-    """Parse one assembled payload → flat record row (error-row model)."""
+def extract_document(conv_id: Optional[str], payload: Optional[str],
+                     merge_tables: bool, review_mode: Optional[bool]):
+    """The per-document policy of every extraction path: parse one
+    assembled payload, optionally merge its table entries, then apply
+    the review profile (``review_mode`` True forces it, False disables
+    it, None applies the reference heuristic ``journals/review.py:10-20``).
+
+    Returns ``(record, None)``, or ``(None, "{Type}: {msg}")`` when any
+    step raises — the reference's per-document try/except
+    (``project.py:57-62``)."""
     try:
         rec = parse_tei(payload, source_path=conv_id)
         if merge_tables:
             merge_table_entries(rec)
         if review_mode is True or (review_mode is None and should_apply(rec)):
             apply_review(rec)
-        return _flatten(conv_id, rec)
+        return rec, None
     except Exception as e:  # noqa: BLE001 — error-row model
-        row = dict(_EMPTY)
-        row.update(conv_id=conv_id, status="error",
-                   error=f"{type(e).__name__}: {e}")
-        return row
+        return None, f"{type(e).__name__}: {e}"
 
 
-def parse_documents(docs: DataFrame, merge_tables: bool = True,
-                    review_mode: Optional[bool] = None) -> DataFrame:
-    """``(conv_id, payload)`` → typed record rows.
+def iter_conversations(pairs: Iterable[tuple],
+                       max_turns: Optional[int] = None) -> Iterator[tuple]:
+    """``(conv_id, text)`` pairs sorted by conv_id → one ``(conv_id,
+    frags)`` per conversation, fragments in input order.
 
-    ``review_mode``: True forces the review profile, False disables it,
-    None applies the reference heuristic (``journals/review.py:10-20``).
-    """
+    NULL and empty texts are skipped (agg-path parity); a NULL conv_id
+    is a real group. ``max_turns`` is the worker-memory guardrail: the
+    moment a conversation holds more fragments its buffer is dropped
+    and ``frags`` is None — later fragments are dropped as they stream
+    in (a 1 GB outlier never buffers) and never rescue it."""
+    conv, frags = _UNSET, []
+    for conv_id, text in pairs:
+        if conv_id != conv:
+            if conv is not _UNSET:
+                yield conv, frags
+            conv, frags = conv_id, []
+        if frags is not None and text:
+            frags.append(text)
+            if max_turns and len(frags) > max_turns:
+                frags = None
+    if conv is not _UNSET:
+        yield conv, frags
+
+
+def _payload_docs(pairs, merge_tables, review_mode):
+    """``(conv_id, payload)`` pairs → ``(conv_id, record, error)``."""
+    for conv_id, payload in pairs:
+        yield (conv_id, *extract_document(conv_id, payload, merge_tables,
+                                          review_mode))
+
+
+def _turn_docs(pairs, merge_tables, review_mode, max_turns):
+    """Sorted ``(conv_id, text)`` turn pairs → ``(conv_id, record,
+    error)``, one per conversation."""
+    for conv_id, frags in iter_conversations(pairs, max_turns):
+        if frags is None:
+            yield conv_id, None, f"oversized: > {max_turns} turns"
+        else:
+            yield (conv_id, *extract_document(
+                conv_id, assemble_payload(frags), merge_tables, review_mode))
+
+
+def _records(df: DataFrame, value_col: str, docs, *args) -> DataFrame:
+    """The records emitter: ``docs(pairs, *args)`` maps the stage's
+    ``(conv_id, value_col)`` pairs to ``(conv_id, record, error)``; each
+    becomes one RECORD_SCHEMA row — an error as a ``status='error'`` row
+    with every other field empty."""
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
-        for pdf in batches:
-            cols: dict = {c: [] for c in _COLS}
-            for conv_id, payload in zip(pdf["conv_id"].tolist(),
-                                        pdf["payload"].tolist()):
-                row = _build_row(conv_id, payload, merge_tables, review_mode)
-                for c in _COLS:
-                    cols[c].append(row[c])
+        pairs = (p for pdf in batches
+                 for p in zip(pdf["conv_id"].tolist(),
+                              pdf[value_col].tolist()))
+        cols: dict = {c: [] for c in _COLS}
+        for conv_id, rec, err in docs(pairs, *args):
+            row = _flatten(conv_id, rec or {})
+            if err is not None:
+                row.update(status="error", error=err)
+            for c in _COLS:
+                cols[c].append(row[c])
+            if len(cols["conv_id"]) >= _RECORD_FLUSH:
+                yield pd.DataFrame(cols)
+                cols = {c: [] for c in _COLS}
+        if cols["conv_id"]:
             yield pd.DataFrame(cols)
 
-    return docs.mapInPandas(run, schema=RECORD_SCHEMA)
+    return df.mapInPandas(run, schema=RECORD_SCHEMA)
+
+
+def parse_documents(docs: DataFrame, merge_tables: bool = True,
+                    review_mode: Optional[bool] = None) -> DataFrame:
+    """``(conv_id, payload)`` → typed record rows (``review_mode`` as in
+    ``extract_document``)."""
+    return _records(docs, "payload", _payload_docs, merge_tables, review_mode)
+
+
+def _sorted_turns(turns: DataFrame, conv_aligned: bool,
+                  partitions: Optional[int]) -> DataFrame:
+    """Input step of the fused paths: raw turn rows hash-partitioned on
+    conv_id (skipped for conv-aligned layouts) and sorted, so each
+    conversation is one contiguous run within its partition."""
+    t = turns.select("conv_id", "turn_idx", "text")
+    if not conv_aligned:
+        t = t.repartition(_fused_partitions(t, partitions), "conv_id")
+    # text tiebreak mirrors array_sort(struct(pos,text)) in the agg path
+    return t.sortWithinPartitions("conv_id", "turn_idx", "text")
 
 
 def _fused_partitions(t: DataFrame, partitions: Optional[int]) -> int:
@@ -168,7 +244,6 @@ def parse_turns_fused(turns: DataFrame, merge_tables: bool = True,
                       review_mode: Optional[bool] = None,
                       conv_aligned: bool = False,
                       partitions: Optional[int] = None,
-                      batch_rows: int = 512,
                       max_turns_per_conv: Optional[int] = None) -> DataFrame:
     """Transcript turns → typed records with NO payload shuffle — the
     scale path, row-identical to ``parse_documents(assemble_documents(
@@ -209,62 +284,12 @@ def parse_turns_fused(turns: DataFrame, merge_tables: bool = True,
     agg remains available in assemble_documents for sources where even
     single payloads must be pre-reduced. ``max_turns_per_conv`` is the
     worker-memory guardrail for adversarial inputs: a conversation
-    exceeding it becomes a ``status='error'`` row (its fragments are
-    dropped as they stream in, so a 1 GB outlier never buffers), never
-    a task OOM.
+    exceeding it becomes a ``status='error'`` row with error
+    ``"oversized: > N turns"`` (``iter_conversations``), never a task
+    OOM.
     """
-    t = turns.select("conv_id", "turn_idx", "text")
-    if not conv_aligned:
-        t = t.repartition(_fused_partitions(t, partitions), "conv_id")
-    # text tiebreak mirrors array_sort(struct(pos,text)) in the agg path
-    t = t.sortWithinPartitions("conv_id", "turn_idx", "text")
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-        from paperslicer_spark.sources.transcripts import assemble_payload
-
-        cols: dict = {c: [] for c in _COLS}
-        state = {"n": 0, "conv": _UNSET, "frags": [], "over": False}
-
-        def close_conv():
-            if state["over"]:
-                row = dict(_EMPTY)
-                row.update(conv_id=state["conv"], status="error",
-                           error=f"oversized: > {max_turns_per_conv} turns")
-            else:
-                row = _build_row(state["conv"],
-                                 assemble_payload(state["frags"]),
-                                 merge_tables, review_mode)
-            for c in _COLS:
-                cols[c].append(row[c])
-            state["n"] += 1
-
-        for pdf in batches:
-            for conv_id, text in zip(pdf["conv_id"].tolist(),
-                                     pdf["text"].tolist()):
-                if conv_id != state["conv"]:
-                    if state["conv"] is not _UNSET:
-                        close_conv()
-                    state["conv"], state["frags"] = conv_id, []
-                    state["over"] = False
-                if state["over"]:
-                    continue  # oversized: drop fragments, never buffer
-                if text:  # null/empty fragments skipped (agg-path parity)
-                    state["frags"].append(text)
-                    if (max_turns_per_conv
-                            and len(state["frags"]) > max_turns_per_conv):
-                        state["over"], state["frags"] = True, []
-            if state["n"] >= batch_rows:
-                yield pd.DataFrame(cols)
-                for c in _COLS:
-                    cols[c] = []
-                state["n"] = 0
-        if state["conv"] is not _UNSET:
-            close_conv()
-        if state["n"]:
-            yield pd.DataFrame(cols)
-
-    return t.mapInPandas(run, schema=RECORD_SCHEMA)
+    return _records(_sorted_turns(turns, conv_aligned, partitions), "text",
+                    _turn_docs, merge_tables, review_mode, max_turns_per_conv)
 
 
 SECTIONS_SCHEMA = (
@@ -273,19 +298,54 @@ SECTIONS_SCHEMA = (
 )
 
 
-def _sections_pa_schema():
-    import pyarrow as pa
-    return pa.schema([
-        ("conv_id", pa.string()), ("section_label", pa.string()),
-        ("clean_text", pa.string()), ("is_canonical", pa.bool_()),
-    ])
-
-
 # Marker label for error-document rows from the sections-only paths
 # (emit_errors=True): at corpus scale "the sections output is silently
 # smaller than the corpus" is an operational trap — the marker row
 # keeps per-document accounting possible on the minimal-bytes path.
 ERROR_SECTION_LABEL = "__error__"
+
+
+def _sections(df: DataFrame, value_col: str, emit_errors: bool, docs,
+              *args) -> DataFrame:
+    """The sections emitter: ``docs`` as in ``_records``; each record
+    explodes into its canonical then its other sections, so only flat
+    strings cross the Arrow boundary. An error yields no row, or with
+    ``emit_errors`` one ``__error__`` row (clean_text = the error text,
+    is_canonical = false)."""
+
+    def run(batches) -> Iterator["pa.RecordBatch"]:
+        import pyarrow as pa
+
+        pa_schema = pa.schema([
+            ("conv_id", pa.string()), ("section_label", pa.string()),
+            ("clean_text", pa.string()), ("is_canonical", pa.bool_()),
+        ])
+        rows = []
+
+        def flush():
+            cols = zip(*rows)
+            rows.clear()
+            return pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, pa_schema)],
+                schema=pa_schema)
+
+        pairs = (p for b in batches
+                 for p in zip(b.column("conv_id").to_pandas().tolist(),
+                              b.column(value_col).to_pandas().tolist()))
+        for conv_id, rec, err in docs(pairs, *args):
+            if err is None:
+                rows += [(conv_id, k, v, True)
+                         for k, v in rec["sections"].items()]
+                rows += [(conv_id, k, v, False)
+                         for k, v in rec["other_sections"].items()]
+            elif emit_errors:
+                rows.append((conv_id, ERROR_SECTION_LABEL, err, False))
+            if len(rows) >= _SECTION_FLUSH:
+                yield flush()
+        if rows:
+            yield flush()
+
+    return df.mapInArrow(run, schema=SECTIONS_SCHEMA)
 
 
 def extract_sections_direct(docs: DataFrame, merge_tables: bool = True,
@@ -305,48 +365,8 @@ def extract_sections_direct(docs: DataFrame, merge_tables: bool = True,
     path; the default False keeps exact row parity with
     ``sections_long(parse_documents(...))``, which drops error docs.
     """
-
-    def run(batches) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        pa_schema = _sections_pa_schema()
-        for batch in batches:
-            conv_ids, labels, texts, canon = [], [], [], []
-            for conv_id, payload in zip(batch.column(0).to_pandas().tolist(),
-                                        batch.column(1).to_pandas().tolist()):
-                try:
-                    rec = parse_tei(payload, source_path=conv_id)
-                    if merge_tables:
-                        merge_table_entries(rec)
-                    if review_mode is True or (review_mode is None
-                                               and should_apply(rec)):
-                        apply_review(rec)
-                except Exception as e:  # noqa: BLE001 — error-row model
-                    if emit_errors:
-                        conv_ids.append(conv_id)
-                        labels.append(ERROR_SECTION_LABEL)
-                        texts.append(f"{type(e).__name__}: {e}")
-                        canon.append(False)
-                    continue
-                for k, v in rec["sections"].items():
-                    conv_ids.append(conv_id)
-                    labels.append(k)
-                    texts.append(v)
-                    canon.append(True)
-                for k, v in rec["other_sections"].items():
-                    conv_ids.append(conv_id)
-                    labels.append(k)
-                    texts.append(v)
-                    canon.append(False)
-            yield pa.RecordBatch.from_arrays([
-                pa.array(conv_ids, pa.string()),
-                pa.array(labels, pa.string()),
-                pa.array(texts, pa.string()),
-                pa.array(canon, pa.bool_()),
-            ], schema=pa_schema)
-
-    return docs.select("conv_id", "payload").mapInArrow(
-        run, schema=SECTIONS_SCHEMA)
+    return _sections(docs.select("conv_id", "payload"), "payload",
+                     emit_errors, _payload_docs, merge_tables, review_mode)
 
 
 def extract_sections_fused(turns: DataFrame, merge_tables: bool = True,
@@ -356,7 +376,7 @@ def extract_sections_fused(turns: DataFrame, merge_tables: bool = True,
                            max_turns_per_conv: Optional[int] = None,
                            emit_errors: bool = False) -> DataFrame:
     """Sections-only fused variant: assembly + parse + explode all
-    inside ONE ``mapInPandas`` over (optionally repartitioned) raw
+    inside ONE ``mapInArrow`` over (optionally repartitioned) raw
     turns — the minimal-bytes path when downstream needs only sections
     (the common 100 TB case): only flat section strings ever cross the
     Arrow boundary, no nested meta/media/reference structs.
@@ -366,87 +386,16 @@ def extract_sections_fused(turns: DataFrame, merge_tables: bool = True,
     document for corpus-size accounting).
 
     ``max_turns_per_conv`` is the same worker-memory guardrail as
-    ``parse_turns_fused``: a conversation exceeding it stops buffering
-    immediately (fragments are dropped as they stream in, so a 1 GB
-    adversarial conversation never accumulates in ``frags``) and
-    yields no section rows — or the error marker with
-    ``emit_errors=True`` — never a task OOM.
+    ``parse_turns_fused``: an oversized conversation yields no section
+    rows — or the error marker with ``emit_errors=True`` — never a
+    task OOM.
 
     ``conv_aligned=True`` has the same layout contract as
     ``parse_turns_fused`` — see its docstring for the file-split
     caveat (bucket files must not be split across tasks)."""
-    t = turns.select("conv_id", "turn_idx", "text")
-    if not conv_aligned:
-        t = t.repartition(_fused_partitions(t, partitions), "conv_id")
-    t = t.sortWithinPartitions("conv_id", "turn_idx", "text")
-
-    def run(batches) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-        from paperslicer_spark.sources.transcripts import assemble_payload
-
-        out = {"conv_id": [], "section_label": [], "clean_text": [],
-               "is_canonical": []}
-        state = {"conv": _UNSET, "frags": [], "over": False}
-
-        def emit(label, text, canon):
-            out["conv_id"].append(state["conv"])
-            out["section_label"].append(label)
-            out["clean_text"].append(text)
-            out["is_canonical"].append(canon)
-
-        def close_conv():
-            if state["over"]:
-                if emit_errors:
-                    emit(ERROR_SECTION_LABEL,
-                         f"oversized: > {max_turns_per_conv} turns", False)
-                return
-            row = _build_row(state["conv"], assemble_payload(state["frags"]),
-                             merge_tables, review_mode)
-            if row["status"] == "error":
-                if emit_errors:
-                    emit(ERROR_SECTION_LABEL, row["error"], False)
-                return
-            for k, v in row["sections"].items():
-                emit(k, v, True)
-            for os_ in row["other_sections"]:
-                emit(os_["head"], os_["text"], False)
-
-        pa_schema = _sections_pa_schema()
-
-        def flush():
-            rb = pa.RecordBatch.from_arrays([
-                pa.array(out["conv_id"], pa.string()),
-                pa.array(out["section_label"], pa.string()),
-                pa.array(out["clean_text"], pa.string()),
-                pa.array(out["is_canonical"], pa.bool_()),
-            ], schema=pa_schema)
-            for k in out:
-                out[k] = []
-            return rb
-
-        for batch in batches:
-            for conv_id, text in zip(batch.column(0).to_pandas().tolist(),
-                                     batch.column(2).to_pandas().tolist()):
-                if conv_id != state["conv"]:
-                    if state["conv"] is not _UNSET:
-                        close_conv()
-                    state["conv"], state["frags"] = conv_id, []
-                    state["over"] = False
-                if state["over"]:
-                    continue  # oversized: drop fragments, never buffer
-                if text:
-                    state["frags"].append(text)
-                    if (max_turns_per_conv
-                            and len(state["frags"]) > max_turns_per_conv):
-                        state["over"], state["frags"] = True, []
-            if len(out["conv_id"]) >= 4096:
-                yield flush()
-        if state["conv"] is not _UNSET:
-            close_conv()
-        if out["conv_id"]:
-            yield flush()
-
-    return t.mapInArrow(run, schema=SECTIONS_SCHEMA)
+    return _sections(_sorted_turns(turns, conv_aligned, partitions), "text",
+                     emit_errors, _turn_docs, merge_tables, review_mode,
+                     max_turns_per_conv)
 
 
 def sections_long(records: DataFrame) -> DataFrame:

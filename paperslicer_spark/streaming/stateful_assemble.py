@@ -14,6 +14,15 @@ arriving after the record was output is dropped instead of seeding a
 second state that would later emit a duplicate. Tombstones age out via
 the same processing-time timeout (with ``with_timeout=True``).
 
+Each emitted conversation goes through the batch paths'
+``extract_document`` with no table merge and no review profile. A
+payload that fails to parse becomes ``status='error'`` with the batch
+error text ``"{Type}: {msg}"``: in the summary output's trailing
+``error`` column (NULL on every other row), in the sections output as
+one ``__error__`` row whose ``clean_text`` is that text. Conversations
+that parse keep their trigger's status: ``ok``, ``timeout`` or
+``oversized``.
+
 This is the engine's custom stateful operator; the reference has no
 streaming at all (SURVEY.md §2.14).
 """
@@ -26,36 +35,38 @@ import pandas as pd
 
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from paperslicer_spark.operators.extract import (
+    ERROR_SECTION_LABEL, extract_document)
+from paperslicer_spark.sources.transcripts import assemble_payload
+
 STATE_SCHEMA = "turn_idxs array<int>, texts array<string>, emitted boolean"
 OUTPUT_SCHEMA = (
     "conv_id string, status string, n_turns int, title string, "
     "doi string, n_sections int, n_figures int, n_tables int, "
-    "n_references int"
+    "n_references int, error string"
 )
 
 
-def _emit(conv_id: str, turn_idxs, texts, status: str) -> pd.DataFrame:
-    from paperslicer_spark.extraction.tei import parse_tei
-    from paperslicer_spark.sources.transcripts import assemble_payload
-
+def _extract(conv_id: str, turn_idxs, texts):
+    """``extract_document`` over the fragments in turn order, with no
+    table merge and no review profile (streaming's semantics)."""
     frags = [t for _, t in sorted(zip(turn_idxs, texts))]
-    payload = assemble_payload(frags)
-    try:
-        rec = parse_tei(payload, source_path=conv_id)
-        meta = rec["meta"]
-        row = {
-            "conv_id": conv_id, "status": status, "n_turns": len(frags),
-            "title": meta.get("title"), "doi": meta.get("doi"),
-            "n_sections": len(rec["sections"]) + len(rec["other_sections"]),
-            "n_figures": len(rec["figures"]),
-            "n_tables": len(rec["tables"]),
-            "n_references": len(rec["references"]),
-        }
-    except Exception as e:  # noqa: BLE001 — error-row model
-        row = {"conv_id": conv_id, "status": f"error:{type(e).__name__}",
-               "n_turns": len(frags), "title": None, "doi": None,
-               "n_sections": 0, "n_figures": 0, "n_tables": 0,
-               "n_references": 0}
+    return extract_document(conv_id, assemble_payload(frags),
+                            merge_tables=False, review_mode=False)
+
+
+def _emit(conv_id: str, turn_idxs, texts, status: str) -> pd.DataFrame:
+    rec, err = _extract(conv_id, turn_idxs, texts)
+    row = {"conv_id": conv_id, "status": "error" if err else status,
+           "n_turns": len(texts), "title": None, "doi": None,
+           "n_sections": 0, "n_figures": 0, "n_tables": 0,
+           "n_references": 0, "error": err}
+    if rec is not None:
+        row.update(
+            title=rec["meta"].get("title"), doi=rec["meta"].get("doi"),
+            n_sections=len(rec["sections"]) + len(rec["other_sections"]),
+            n_figures=len(rec["figures"]), n_tables=len(rec["tables"]),
+            n_references=len(rec["references"]))
     return pd.DataFrame([row])
 
 
@@ -69,30 +80,19 @@ def _emit_sections(conv_id: str, turn_idxs, texts, status: str) -> pd.DataFrame:
     """Long-form sections rows per completed conversation — the
     streaming twin of the batch flagship output (sections_long ∘
     parse; no table merge / review, like ``_emit``)."""
-    from paperslicer_spark.extraction.tei import parse_tei
-    from paperslicer_spark.sources.transcripts import assemble_payload
-
-    frags = [t for _, t in sorted(zip(turn_idxs, texts))]
-    try:
-        rec = parse_tei(assemble_payload(frags), source_path=conv_id)
-    except Exception as e:  # noqa: BLE001 — error-row model
-        return pd.DataFrame([{
-            "conv_id": conv_id, "status": f"error:{type(e).__name__}",
-            "section_label": None, "clean_text": None,
-            "is_canonical": None}])
-    rows = [{"conv_id": conv_id, "status": status, "section_label": k,
-             "clean_text": v, "is_canonical": True}
-            for k, v in rec["sections"].items()]
-    rows += [{"conv_id": conv_id, "status": status, "section_label": k,
-              "clean_text": v, "is_canonical": False}
-             for k, v in rec["other_sections"].items()]
+    rec, err = _extract(conv_id, turn_idxs, texts)
+    if err:
+        rows = [(conv_id, "error", ERROR_SECTION_LABEL, err, False)]
+    else:
+        rows = [(conv_id, status, k, v, True)
+                for k, v in rec["sections"].items()]
+        rows += [(conv_id, status, k, v, False)
+                 for k, v in rec["other_sections"].items()]
     if not rows and status != "ok":
         # oversized/timeout conversations with nothing parseable still
         # leave one accounting row — same rationale as the batch
         # paths' emit_errors marker
-        rows = [{"conv_id": conv_id, "status": status,
-                 "section_label": None, "clean_text": None,
-                 "is_canonical": None}]
+        rows = [(conv_id, status, None, None, None)]
     return pd.DataFrame(rows, columns=["conv_id", "status",
                                        "section_label", "clean_text",
                                        "is_canonical"])
@@ -114,9 +114,9 @@ def _stateful_fn(emit, max_turns_per_conv=None):
     twin of the batch paths' argument): the cap is checked per
     appended fragment INSIDE the batch loop — the moment a
     conversation exceeds it the buffer is dropped and further
-    fragments are ignored (exactly the batch paths' ``state['over']``
-    semantics, including a ``<back`` arriving after the cap NOT
-    rescuing the conversation), one ``status='oversized'`` row is
+    fragments are ignored (exactly ``iter_conversations``' cap rule,
+    including a ``<back`` arriving after the cap NOT rescuing the
+    conversation), one ``status='oversized'`` row is
     emitted and the state tombstones. Within-batch memory is bounded
     to cap+1 fragments plus the Arrow batch pandas already
     materialized; cross-batch state is bounded to the cap."""
@@ -154,14 +154,14 @@ def _stateful_fn(emit, max_turns_per_conv=None):
                     complete = True
                 if (max_turns_per_conv
                         and len(texts) > max_turns_per_conv):
-                    # cap tripped mid-loop: drop the buffer NOW (batch
-                    # paths' state['over'] shape) so within-batch
-                    # memory is bounded too, not just cross-batch state
+                    # cap tripped mid-loop: drop the buffer NOW so
+                    # within-batch memory is bounded too, not just
+                    # cross-batch state
                     over = True
                     turn_idxs, texts = [], []
         if over:
-            # oversized wins even over a same-batch <back — identical
-            # to the batch paths, where 'over' never resets
+            # oversized wins even over a same-batch <back — as in
+            # iter_conversations, a tripped cap never resets
             state.update(([], [], True))
             _set_timeout(state)
             yield emit(conv_id, [], [], "oversized")

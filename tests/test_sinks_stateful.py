@@ -210,6 +210,41 @@ def test_stateful_oversize_guardrail():
     assert st3.get == ([], [], True)
 
 
+def test_stateful_parse_error_matches_batch_error_text(spark):
+    """A conversation that completes (ends in ``<back``) but does not
+    parse becomes ``status='error'`` carrying the batch paths' error
+    text: in the summary's ``error`` column, and as the sections
+    output's ``__error__`` row."""
+    import pandas as pd
+
+    from paperslicer_spark.operators.extract import (
+        ERROR_SECTION_LABEL, parse_turns_fused)
+    from paperslicer_spark.streaming.stateful_assemble import (
+        _emit, _emit_sections, _stateful_fn)
+
+    frags = [(0, "<teiHeader><fileDesc><titleStmt><title>X</title>"),
+             (1, "<back")]
+    turns = spark.createDataFrame(
+        [("bad", i, "tool", t, "gen", None) for i, t in frags],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    want = parse_turns_fused(turns).collect()[0]["error"]
+    assert want.startswith("ParseError: ")
+
+    def batch():
+        return [pd.DataFrame(frags, columns=["turn_idx", "text"])]
+
+    out = list(_stateful_fn(_emit)(("bad",), batch(), _FakeState()))
+    assert len(out) == 1
+    assert (out[0]["status"][0], out[0]["error"][0]) == ("error", want)
+    sec = list(_stateful_fn(_emit_sections)(("bad",), batch(), _FakeState()))
+    assert len(sec) == 1
+    assert sec[0].to_dict("records") == [{
+        "conv_id": "bad", "status": "error",
+        "section_label": ERROR_SECTION_LABEL, "clean_text": want,
+        "is_canonical": False}]
+
+
 def test_stateful_sections_stream(spark, corpus_path, tmp_path):
     """output='sections': streamed long-form sections equal the batch
     pipeline's (same parse settings: no merge, no review)."""

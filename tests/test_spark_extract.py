@@ -210,10 +210,14 @@ def test_fused_parse_equals_agg_path(spark, turns):
     a = sorted(_record_key(r) for r in via_agg.collect())
     b = sorted(_record_key(r) for r in fused.collect())
     assert a == b
-    # small batch_rows exercises the cross-batch conversation carry
-    tiny = parse_turns_fused(turns, review_mode=None, partitions=3,
-                             batch_rows=2)
-    c = sorted(_record_key(r) for r in tiny.collect())
+    # two-row Arrow input batches: conversations straddle input batches,
+    # which exercises the cross-batch conversation carry
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    try:
+        tiny = parse_turns_fused(turns, review_mode=None, partitions=3)
+        c = sorted(_record_key(r) for r in tiny.collect())
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
     assert a == c
     # conv-aligned (zero-shuffle) variant: the test corpus is a single
     # file, so the layout guarantee holds trivially

@@ -227,7 +227,7 @@ DUP_ZONE_TEI = """
 
 def test_duplicate_zone_id_resolution_parity(reference_modules):
     # Round-6: zone_in_parent resolves duplicate xml:id zones with the
-    # SAME last-in-document-order winner as the original zones map —
+    # reference's first-in-document-order winner (``xpath(...)[0]``) —
     # compare byte-exactly against the reference on a payload where a
     # parent-preorder child scan would pick the other zone.
     ref_parser, _, _ = reference_modules
