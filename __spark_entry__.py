@@ -54,6 +54,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # the documents read of CPU-heavy per-row operators, widened above
+    # the scan; filter/hash/sample queries read raw via _t (measured:
+    # the exchange took x28 0.29 -> 0.52 s, sf0.1, local[4], min of 6)
+    return TS.widen_undersplit(_t(spark, sf_dir, "documents"))
+
+
 def _docs_as_transcripts(docs: DataFrame) -> DataFrame:
     """Wrap the driver ``documents`` table as 2-turn TEI transcripts so
     the extraction pipeline can run over driver-provided parquet."""
@@ -218,7 +225,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["q09_lang_rates"] = q09_lang_rates
 
     def q10_minhash(spark, sf):
-        return DD.minhash_signatures(_t(spark, sf, "documents"),
+        return DD.minhash_signatures(_corpus(spark, sf),
                                      "doc_id", "text", n=3, num_hashes=4)
     q["q10_minhash"] = q10_minhash
 
@@ -226,7 +233,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # max_doc_freq=50: the frequent-shingle skew cap (stop shingles
         # in >10% of this corpus are dropped from intersections AND set
         # sizes) — same cap expressed in the oracle SQL
-        return DD.ngram_jaccard_pairs(_t(spark, sf, "documents"),
+        return DD.ngram_jaccard_pairs(_corpus(spark, sf),
                                       "doc_id", "text", n=3, threshold=0.2,
                                       max_doc_freq=50)
     q["q11_jaccard_pairs"] = q11_jaccard_pairs
@@ -376,11 +383,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["x07_validation_scores"] = x07_validation_scores
 
     def x08_simhash(spark, sf):
-        return DD.simhash(_t(spark, sf, "documents"), "doc_id", "text")
+        return DD.simhash(_corpus(spark, sf), "doc_id", "text")
     q["x08_simhash"] = x08_simhash
 
     def x09_minhash_lsh_pairs(spark, sf):
-        return DD.minhash_lsh_pairs(_t(spark, sf, "documents"),
+        return DD.minhash_lsh_pairs(_corpus(spark, sf),
                                     "doc_id", "text", n=3,
                                     num_hashes=12, bands=4)
     q["x09_minhash_lsh_pairs"] = x09_minhash_lsh_pairs
@@ -544,14 +551,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # near-dup clustering: LSH candidate pairs → connected
         # components (min-label propagation) → per-doc cluster id +
         # keep-representative flag
-        return DD.dup_clusters(_t(spark, sf, "documents"),
+        return DD.dup_clusters(_corpus(spark, sf),
                                "doc_id", "text", n=3,
                                num_hashes=12, bands=4)
     q["x26_dup_clusters"] = x26_dup_clusters
 
     def x27_gopher_quality(spark, sf):
         from paperslicer_spark.operators.curation import gopher_quality
-        return gopher_quality(_t(spark, sf, "documents"),
+        return gopher_quality(_corpus(spark, sf),
                               "doc_id", "text")
     q["x27_gopher_quality"] = x27_gopher_quality
 
@@ -570,7 +577,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # representative ∧ stratified sample (x27 ∧ x26 ∧ x28 fused)
         from paperslicer_spark.operators.curation import curated_keep
         return curated_keep(
-            _t(spark, sf, "documents"), "doc_id", "text", "lang",
+            _corpus(spark, sf), "doc_id", "text", "lang",
             rates={"en": 0.5, "de": 0.25, "fr": 0.25, "es": 0.25},
             default_rate=0.1,
         ).select("doc_id", "lang", "bucket")
@@ -614,14 +621,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def x32_simhash_pairs(spark, sf):
         # SimHash Hamming-LSH near-dup pairs (guaranteed recall at
         # Hamming <= 3 with 4 x 16-bit bands by pigeonhole)
-        return DD.simhash_lsh_pairs(_t(spark, sf, "documents"),
+        return DD.simhash_lsh_pairs(_corpus(spark, sf),
                                     "doc_id", "text", max_hamming=3)
     q["x32_simhash_pairs"] = x32_simhash_pairs
 
     def x33_chunk_documents(spark, sf):
         # context-window chunking: 32-token windows, 8-token overlap
         from paperslicer_spark.operators.curation import chunk_documents
-        return chunk_documents(_t(spark, sf, "documents"),
+        return chunk_documents(_corpus(spark, sf),
                                "doc_id", "text",
                                chunk_tokens=32, overlap=8)
     q["x33_chunk_documents"] = x33_chunk_documents
@@ -653,7 +660,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # sharded greedy sequence packing over the x33 chunks
         from paperslicer_spark.operators.curation import (
             chunk_documents, pack_sequences)
-        chunks = chunk_documents(_t(spark, sf, "documents"),
+        chunks = chunk_documents(_corpus(spark, sf),
                                  "doc_id", "text",
                                  chunk_tokens=32, overlap=8)
         return pack_sequences(chunks, capacity=512, n_shards=16) \
@@ -691,7 +698,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # integer-only tf-idf cousin: top-3 terms per doc by
         # (tf desc, corpus df asc, term asc)
         from paperslicer_spark.operators.curation import distinctive_terms
-        return distinctive_terms(_t(spark, sf, "documents"),
+        return distinctive_terms(_corpus(spark, sf),
                                  "doc_id", "text", k=3, min_len=4)
     q["x38_distinctive_terms"] = x38_distinctive_terms
 
@@ -712,7 +719,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # joined with blank lines — the x34 synthesize-then-operate
         # pattern; the driver corpus has no real paragraph breaks)
         from paperslicer_spark.operators.curation import paragraph_dedup
-        docs = _t(spark, sf, "documents").where(F.trim("text") != "")
+        docs = _corpus(spark, sf).where(F.trim("text") != "")
         paras = TS.bind(
             F.split(F.trim(F.col("text")), r"\s+"),
             lambda t: F.transform(
@@ -940,14 +947,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def x52_c4_line_filter(spark, sf):
         # C4-style line-level cleaning (min words ∧ terminal punct ∧
-        # no banned phrase) + doc rebuild, over synthesized lines.
-        # widen BEFORE the synth-lines projection: the line synthesis
-        # is itself a CPU-heavy HOF map and would otherwise run at the
-        # scan's (single-file) parallelism — rows are unchanged, only
-        # their placement
+        # no banned phrase) + doc rebuild, over synthesized lines
         from paperslicer_spark.operators.curation import c4_line_filter
-        docs = TS.widen_undersplit(
-            _t(spark, sf, "documents").where(F.trim("text") != ""))
+        docs = _corpus(spark, sf).where(F.trim("text") != "")
         withl = docs.select(
             "doc_id", F.array_join(_synth_lines(), "\n").alias("text"))
         return c4_line_filter(withl, "doc_id", "text", min_words=3)
@@ -958,7 +960,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # corpus's own add-one top-20 unigram LM (KenLM-filter
         # stand-in); count pass → broadcast model → scoring pass
         from paperslicer_spark.operators.curation import unigram_logprob
-        return unigram_logprob(_t(spark, sf, "documents"),
+        return unigram_logprob(_corpus(spark, sf),
                                "doc_id", "text", vocab_size=20)
     q["x53_unigram_logprob"] = x53_unigram_logprob
 
@@ -967,9 +969,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (count + chars) over synthesized 5-token lines, top-3/4-gram
         # occupancy over the raw tokens — all zero-shuffle
         from paperslicer_spark.operators.curation import repetition_stats
-        # widen before the synth projection (same rationale as x52)
-        docs = TS.widen_undersplit(
-            _t(spark, sf, "documents").where(F.trim("text") != ""))
+        docs = _corpus(spark, sf).where(F.trim("text") != "")
         fives = TS.bind(
             F.split(F.trim(F.col("text")), r"\s+"),
             lambda t: F.transform(
@@ -1010,7 +1010,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.concat(F.array_join(F.reverse(F.split(t, r"\s+")), " "),
                      F.lit(" brand new content")).alias("text"))
         new = exact.unionByName(near).unionByName(fresh)
-        return delta_dedup(new, docs, "doc_id", "text")
+        # only the corpus is widened: each of the new batch's three
+        # filtered branches would shuffle its own copy
+        corpus = _corpus(spark, sf).where(F.trim("text") != "")
+        return delta_dedup(new, corpus, "doc_id", "text")
     q["x56_delta_dedup"] = x56_delta_dedup
 
     def x57_epoch_mix(spark, sf):
@@ -1084,7 +1087,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # sum is exact bigint arithmetic in both engines
         from paperslicer_spark.operators.curation import \
             hashed_classifier_score
-        docs = _t(spark, sf, "documents").where(F.trim("text") != "")
+        docs = _corpus(spark, sf).where(F.trim("text") != "")
         return hashed_classifier_score(docs, "doc_id", "text",
                                        dim=4096, threshold=0.0)
     q["x61_classifier_score"] = x61_classifier_score
@@ -1094,9 +1097,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # target-domain (lang='de') hashed uni+bigram LM vs the
         # raw-corpus LM — distribution-matching data selection
         from paperslicer_spark.operators.curation import dsir_weights
-        docs = _t(spark, sf, "documents")
-        target = docs.where(F.col("lang") == "de")
-        return dsir_weights(docs, target, "doc_id", "text", dim=1024)
+        # a widened target would shuffle its own filtered copy
+        target = _t(spark, sf, "documents").where(F.col("lang") == "de")
+        return dsir_weights(_corpus(spark, sf), target, "doc_id", "text",
+                            dim=1024)
     q["x62_dsir_weights"] = x62_dsir_weights
 
     def x63_hist_quantiles(spark, sf):
@@ -1150,7 +1154,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # duplicated 30-char window loses all but its first global
         # occurrence; docs rebuilt from the surviving char ranges
         from paperslicer_spark.operators.dedup import substring_dedup
-        docs = _t(spark, sf, "documents").where(F.trim("text") != "")
+        docs = _corpus(spark, sf).where(F.trim("text") != "")
         return substring_dedup(docs, "doc_id", "text", min_length=30)
     q["x65_substring_dedup"] = x65_substring_dedup
 
@@ -1180,7 +1184,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # id) instead of the arbitrary min-id representative;
         # singletons keep themselves
         from paperslicer_spark.operators.dedup import canonical_keep
-        return canonical_keep(_t(spark, sf, "documents"),
+        return canonical_keep(_corpus(spark, sf),
                               "doc_id", "text", n=3,
                               num_hashes=12, bands=4)
     q["x68_canonical_keep"] = x68_canonical_keep
@@ -1190,7 +1194,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # immediate broadcast query-term semi-join (corpus never
         # shuffles unmatched tokens), Lucene idf, per-query top-10
         from paperslicer_spark.operators.search import bm25_topk
-        docs = _t(spark, sf, "documents")
+        docs = _corpus(spark, sf)
         queries = spark.createDataFrame(
             _BM25_QUERIES, "query_id long, query_text string")
         return bm25_topk(docs, queries, k=10)
@@ -1201,7 +1205,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # with cumulative corpus coverage (TakeOrdered cut, window
         # only over the 256-row result)
         from paperslicer_spark.operators.curation import vocab_coverage
-        return vocab_coverage(_t(spark, sf, "documents"), "text",
+        return vocab_coverage(_corpus(spark, sf), "text",
                               vocab_size=256)
     q["x70_vocab_coverage"] = x70_vocab_coverage
 
@@ -1210,7 +1214,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # under the corpus's own add-one bigram model (x53's unigram
         # filter cannot see improbable transitions)
         from paperslicer_spark.operators.curation import bigram_logprob
-        return bigram_logprob(_t(spark, sf, "documents"),
+        return bigram_logprob(_corpus(spark, sf),
                               "doc_id", "text")
     q["x71_bigram_logprob"] = x71_bigram_logprob
 
@@ -1219,7 +1223,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # trigrams whose global first occurrence is in an earlier doc
         # (the per-document cousin of x39's cross-split collision scan)
         from paperslicer_spark.operators.dedup import ngram_novelty
-        return ngram_novelty(_t(spark, sf, "documents"),
+        return ngram_novelty(_corpus(spark, sf),
                              "doc_id", "text", n=3)
     q["x72_ngram_novelty"] = x72_ngram_novelty
 
@@ -1228,7 +1232,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # straddle the split (x26's LSH+CC clusters, seeded-md5 bucket
         # of the cluster label, singletons = own cluster)
         from paperslicer_spark.operators.dedup import leakage_safe_split
-        return leakage_safe_split(_t(spark, sf, "documents"),
+        return leakage_safe_split(_corpus(spark, sf),
                                   "doc_id", "text", eval_pct=20)
     q["x73_leakage_safe_split"] = x73_leakage_safe_split
 
@@ -1237,7 +1241,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # source pair, how many near-dup doc pairs straddle them
         # (licensing/de-biasing audit before mixing sources)
         from paperslicer_spark.operators.dedup import source_overlap
-        return source_overlap(_t(spark, sf, "documents"),
+        return source_overlap(_corpus(spark, sf),
                               "doc_id", "text", "source")
     q["x74_source_overlap"] = x74_source_overlap
 
@@ -1246,7 +1250,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # char pairs over the distinct-word vocabulary (the argmax of
         # this relation IS the first BPE merge)
         from paperslicer_spark.operators.curation import bpe_pair_counts
-        return bpe_pair_counts(_t(spark, sf, "documents"), "text",
+        return bpe_pair_counts(_corpus(spark, sf), "text",
                                top_k=64)
     q["x75_bpe_pair_counts"] = x75_bpe_pair_counts
 
@@ -1268,7 +1272,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # unigram distribution from the corpus blend (one corpus
         # pass; roll-ups are windows over the vocab-sized relation)
         from paperslicer_spark.operators.curation import source_kl
-        return source_kl(_t(spark, sf, "documents"), "source", "text")
+        return source_kl(_corpus(spark, sf), "source", "text")
     q["x77_source_kl"] = x77_source_kl
 
     def x78_pagerank(spark, sf):
@@ -1419,7 +1423,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # pair fan-out, map-side-combined count, TakeOrdered top-k
         from paperslicer_spark.operators.curation import (
             cooccurrence_counts)
-        docs = _t(spark, sf, "documents")
+        docs = _corpus(spark, sf)
         return cooccurrence_counts(docs, "text", window=3, top_k=200)
     q["x88_cooccurrence"] = x88_cooccurrence
 
@@ -1462,7 +1466,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # zero-shuffle gram fan-out, map-side-combined (source, gram)
         # count, rollup over the vocabulary-sized relation
         from paperslicer_spark.operators.curation import ngram_diversity
-        docs = _t(spark, sf, "documents")
+        docs = _corpus(spark, sf)
         return ngram_diversity(docs, "source", "text", n=3)
     q["x91_ngram_diversity"] = x91_ngram_diversity
 
@@ -1505,7 +1509,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # asymmetric near-dup (quote/subset) detection: n-gram
         # overlap coefficient inter/min(|A|,|B|) ≥ 0.4 under the q11
         # stop-shingle cap — same no-self-join capped plan shape
-        return DD.containment_pairs(_t(spark, sf, "documents"),
+        return DD.containment_pairs(_corpus(spark, sf),
                                     "doc_id", "text", n=3,
                                     threshold=0.4, max_doc_freq=50)
     q["x95_containment_pairs"] = x95_containment_pairs
@@ -1591,7 +1595,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # map-side-combined rollup on the existing shard exchange
         from paperslicer_spark.operators.curation import (
             chunk_documents, pack_sequences, packing_stats)
-        chunks = chunk_documents(_t(spark, sf, "documents"),
+        chunks = chunk_documents(_corpus(spark, sf),
                                  "doc_id", "text",
                                  chunk_tokens=32, overlap=8)
         packs = pack_sequences(chunks, capacity=512, n_shards=16)

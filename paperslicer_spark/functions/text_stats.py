@@ -46,19 +46,19 @@ def bind(value: Column, fn) -> Column:
 
 
 def widen_undersplit(df):
-    """Repartition a batch DataFrame up to the session parallelism
-    when its source has fewer splits than cores.
+    """Repartition a batch corpus read up to the session parallelism
+    when its scan has fewer splits than cores.
 
-    CPU-heavy corpus passes (tokenize/explode/HOF maps) inherit the
-    SCAN's parallelism: a corpus packed into a few small files (or one
-    file) runs the whole pass on that many tasks at ANY cluster size —
-    `spark.sql.files.openCostInBytes` bins small files together, so a
-    26 MB probe corpus scans ~3-way on 32 cores (measured: bm25's
-    corpus pass was flat 8→32 cores until widened). The one-off
-    exchange is ~free relative to the per-row compute, and well-split
-    production inputs (100 TB = thousands of splits) skip the branch
-    entirely. Streaming inputs skip the check: ``.rdd`` is batch-only
-    and micro-batch parallelism is the source's trigger setting.
+    Batch corpus inputs are widened by their reader
+    (``__spark_entry__._corpus``, ``scripts/run_curate.py``);
+    operators never widen. CPU-heavy corpus passes (tokenize/explode/HOF maps)
+    inherit the scan's parallelism, so a corpus packed into one small
+    file runs the whole pass on one task at ANY cluster size
+    (measured: bm25's corpus pass was flat 8→32 cores until widened).
+    On a scan the probe is a file-split count and the one exchange
+    sits directly above it; well-split inputs skip the branch.
+    Streaming inputs skip the check: ``.rdd`` is batch-only and
+    micro-batch parallelism is the source's trigger setting.
     """
     sc = df.sparkSession.sparkContext
     if not df.isStreaming and \

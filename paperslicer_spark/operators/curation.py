@@ -25,8 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from paperslicer_spark.functions.text_stats import (WS, bind, md5_bigint,
-                                                    tokens,
-                                                    widen_undersplit)
+                                                    tokens)
 
 
 def gopher_quality(df: DataFrame, id_col: str, text_col: str,
@@ -67,10 +66,6 @@ def gopher_quality(df: DataFrame, id_col: str, text_col: str,
     array, computed with one ``F.aggregate`` lambda pass. Identical
     value, no exchange, scales like a parquet scan.
     """
-    # CPU-heavy per-row map (interpreted HOF ≈ 400 docs/s/core): an
-    # under-split input serializes it — widen to session parallelism
-    # (see widen_undersplit; well-split 100 TB inputs skip the branch)
-    df = widen_undersplit(df)
 
     def _run_step(acc, x):
         is_new = acc["prev"].isNull() | (acc["prev"] != x)
@@ -150,14 +145,14 @@ def curated_keep(df: DataFrame, id_col: str, text_col: str,
     """
     from paperslicer_spark.operators.dedup import dup_clusters
 
-    quality = gopher_quality(df, id_col, text_col).where("keep") \
-        .select(F.col("doc").alias(id_col))
+    # the quality pass carries the input columns, so ``df`` is read
+    # once here (no self-join back onto it)
+    carry = [c for c in df.columns if c != id_col]
+    quality = gopher_quality(df, id_col, text_col, carry_cols=carry) \
+        .where("keep").select(F.col("doc").alias(id_col), *carry)
     non_reps = dup_clusters(df, id_col, text_col) \
         .where(~F.col("is_rep")).select(F.col("doc").alias(id_col))
-    kept = (
-        df.join(quality, id_col, "left_semi")
-        .join(non_reps, id_col, "left_anti")
-    )
+    kept = quality.join(non_reps, id_col, "left_anti")
     return stratified_sample(kept, id_col, strata_col, rates,
                              default_rate=default_rate)
 
@@ -211,10 +206,6 @@ def chunk_documents(df: DataFrame, id_col: str, text_col: str,
     Chunks past the cap are dropped (the doc is truncated, not
     errored — chunking an outlier's head is the usual intent).
     """
-    # CPU-heavy tokenizing map: widen an under-split batch input to
-    # session parallelism (gopher_quality precedent; no-op when
-    # well-split or streaming)
-    df = widen_undersplit(df)
     assert 0 < overlap < chunk_tokens
     stride = chunk_tokens - overlap
     toks = tokens(F.lower(F.col(text_col)))
@@ -297,10 +288,6 @@ def distinctive_terms(df: DataFrame, id_col: str, text_col: str,
     the df relation is vocabulary-sized — broadcast or shuffle join is
     AQE's size-based call); final top-k is a per-doc window.
     """
-    # CPU-heavy tokenizing map: widen an under-split batch input to
-    # session parallelism (gopher_quality precedent; no-op when
-    # well-split or streaming)
-    df = widen_undersplit(df)
     from pyspark.sql import Window
 
     tok = (
@@ -345,10 +332,6 @@ def paragraph_dedup(df: DataFrame, id_col: str, text_col: str,
     exists to crush. At 10^12 rows the reassembly shuffle moves only
     KEPT paragraphs (duplicates die before it).
     """
-    # CPU-heavy tokenizing map: widen an under-split batch input to
-    # session parallelism (gopher_quality precedent; no-op when
-    # well-split or streaming)
-    df = widen_undersplit(df)
     from pyspark.sql import Window
 
     paras = (
@@ -415,10 +398,6 @@ def boilerplate_strip(df: DataFrame, id_col: str, text_col: str,
     ``groupBy(doc)``.  Worst skew on the hash side is the most common
     template line — exactly the row group the anti-join deletes.
     """
-    # CPU-heavy tokenizing map: widen an under-split batch input to
-    # session parallelism (gopher_quality precedent; no-op when
-    # well-split or streaming)
-    df = widen_undersplit(df)
     g = (F.col(group_col) if group_col else F.lit("")).alias("_g")
     lines = (
         df.select(F.col(id_col), g, F.posexplode(
@@ -851,11 +830,8 @@ def c4_line_filter(df: DataFrame, id_col: str, text_col: str,
     higher-order map on the base scan — split, per-line predicate
     inside ``F.filter`` (each predicate term reads only the lambda
     element, so the no-CSE-in-HOF trap does not apply), rejoin.
-    Stateless → streams unchanged. CPU-heavy per-row map → widen an
-    under-split batch input to session parallelism (gopher_quality
-    precedent; no-op on well-split inputs and streaming).
+    Stateless → streams unchanged.
     """
-    df = widen_undersplit(df)
 
     def _line_keep(line):
         t = F.trim(line)
@@ -921,10 +897,6 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str,
     aggregates on the row, n-gram occupancy from the sorted-array
     max-run pass — no (doc, ngram) shuffle, scales like a scan.
     """
-    # CPU-heavy tokenizing map: widen an under-split batch input to
-    # session parallelism (gopher_quality precedent; no-op when
-    # well-split or streaming)
-    df = widen_undersplit(df)
     def _char_sum(arr):
         return F.aggregate(
             arr, F.lit(0).cast("bigint"),
@@ -1001,10 +973,6 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str,
     model, cf. the x15 frozen-centroid pattern) and run only the
     scoring pass per corpus sweep.
     """
-    # CPU-heavy tokenizing map: widen an under-split batch input to
-    # session parallelism (gopher_quality precedent; no-op when
-    # well-split or streaming)
-    df = widen_undersplit(df)
     toks = df.where(F.trim(F.col(text_col)) != "") \
         .select(F.col(id_col).alias("doc"),
                 F.explode(tokens(F.lower(F.col(text_col))))
@@ -1101,10 +1069,6 @@ def hashed_classifier_score(df: DataFrame, id_col: str, text_col: str,
     exploded tokens + one groupBy(doc) shuffle); the two paths are
     equality-tested.
     """
-    # CPU-heavy tokenizing map: widen an under-split batch input to
-    # session parallelism (gopher_quality precedent; no-op when
-    # well-split or streaming)
-    df = widen_undersplit(df)
     def bucket_of(tok):
         return F.pmod(md5_bigint(tok, hex_chars=7), F.lit(dim))
 
@@ -1182,10 +1146,6 @@ def dsir_weights(df: DataFrame, target: DataFrame, id_col: str,
     groupBy(doc). The target corpus is typically tiny (Wikipedia-like
     seed) — its scan cost is the floor.
     """
-    # CPU-heavy tokenizing map: widen an under-split batch input to
-    # session parallelism (gopher_quality precedent; no-op when
-    # well-split or streaming)
-    df = widen_undersplit(df)
     def grams_of(dfin):
         t = tokens(F.lower(F.col(text_col)))
         def build(tk):
@@ -1279,10 +1239,6 @@ def vocab_coverage(df: DataFrame, text_col: str,
     sort; the cumulative window runs on the V-row result (single tiny
     partition by construction, V small by contract).
     """
-    # CPU-heavy tokenizing map: widen an under-split batch input to
-    # session parallelism (gopher_quality precedent; no-op when
-    # well-split or streaming)
-    df = widen_undersplit(df)
     from pyspark.sql import Window
 
     toks = (
@@ -1332,7 +1288,7 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str
     x53 frozen-model note applies verbatim). The bigram array is
     ``bind``-bound (no-CSE-in-HOF rule) so gram slicing is O(n).
     """
-    base = widen_undersplit(df).where(F.trim(F.col(text_col)) != "") \
+    base = df.where(F.trim(F.col(text_col)) != "") \
         .select(F.col(id_col).alias("doc"),
                 F.lower(F.col(text_col)).alias("_t"))
 
@@ -1384,10 +1340,6 @@ def bpe_pair_counts(df: DataFrame, text_col: str,
     corpus); the top-k cut is TakeOrderedAndProject (per-partition
     k-row heaps); the rank window sees only the k survivors.
     """
-    # CPU-heavy tokenizing map: widen an under-split batch input to
-    # session parallelism (gopher_quality precedent; no-op when
-    # well-split or streaming)
-    df = widen_undersplit(df)
     from pyspark.sql import Window
 
     vocab = (
@@ -1434,10 +1386,6 @@ def source_kl(df: DataFrame, source_col: str, text_col: str
     ``+ ln(N)`` constant computed from the final |sources|-row
     relation, so no global window ever sees the vocab relation.
     """
-    # CPU-heavy tokenizing map: widen an under-split batch input to
-    # session parallelism (gopher_quality precedent; no-op when
-    # well-split or streaming)
-    df = widen_undersplit(df)
     from pyspark.sql import Window
 
     sw = (
@@ -1487,10 +1435,6 @@ def cooccurrence_counts(df: DataFrame, text_col: str, window: int = 3,
     sort).  ``t`` is a materialized column attribute, so referencing
     it inside the nested lambdas is safe under the no-CSE rule.
     """
-    # CPU-heavy tokenizing map: widen an under-split batch input to
-    # session parallelism (gopher_quality precedent; no-op when
-    # well-split or streaming)
-    df = widen_undersplit(df)
     from pyspark.sql import Window
 
     assert window == 3, "LCM weights are fixed for window=3"
@@ -1533,10 +1477,6 @@ def ngram_diversity(df: DataFrame, source_col: str, text_col: str,
     grams collapse before the exchange; the per-source rollup then
     runs over the vocabulary-sized relation, never the corpus.
     """
-    # CPU-heavy tokenizing map: widen an under-split batch input to
-    # session parallelism (gopher_quality precedent; no-op when
-    # well-split or streaming)
-    df = widen_undersplit(df)
     grams = df.where(F.trim(F.col(text_col)) != "").select(
         F.col(source_col).alias("source"),
         F.explode(bind(

@@ -20,8 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from paperslicer_spark.functions.text_stats import (md5_bigint, shingles,
-                                                    tokens,
-                                                    widen_undersplit)
+                                                    tokens)
 
 
 def first_wins_dedup(df: DataFrame, primary_key, fallback_key,
@@ -104,11 +103,6 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     shingles — is identical in both engines; at 60 bits a collision is
     ~1e-15 per doc).
     """
-    # shingle construction + md5 is the CPU-heavy term (measured 4.3s
-    # of the 6.0s query at sf1.0) and inherits the SCAN's parallelism:
-    # a single-file/single-row-group corpus runs it on one core —
-    # widen to session parallelism (no-op on well-split inputs)
-    df = widen_undersplit(df)
     sh = df.select(
         F.col(id_col).alias("doc"),
         F.explode(shingles(F.col(text_col), n)).alias("shingle"),
@@ -212,8 +206,6 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str,
     ``cont`` rounded to 6dp before thresholding (oracle boundary
     agreement).
     """
-    # same widen rationale as ngram_jaccard_pairs
-    df = widen_undersplit(df)
     sh = df.select(
         F.col(id_col).alias("doc"),
         F.explode(shingles(F.col(text_col), n)).alias("shingle"),
@@ -275,9 +267,6 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     """Per-doc MinHash signature: base hash = md5 28-bit prefix of the
     shingle (computed ONCE), seed j's value = min over shingles of
     ``(a_j * h + b_j) % (2^31-1)``."""
-    # shingle+md5 is CPU-heavy and runs at scan parallelism — widen
-    # under-split batch inputs (no-op when well-split or streaming)
-    df = widen_undersplit(df)
     sh = df.select(
         F.col(id_col).alias("doc"),
         F.explode(shingles(F.col(text_col), n)).alias("shingle"),
@@ -532,9 +521,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str,
       rows of 64 ints; the scale path when Python worker capacity is
       the bottleneck.
     """
-    # widen an under-split batch input before the tokenizing map
-    # (no-op when well-split or streaming)
-    df = widen_undersplit(df)
     if impl == "jvm":
         return simhash_jvm(df, id_col, text_col)
     import pandas as pd
@@ -760,10 +746,7 @@ def substring_dedup(df: DataFrame, id_col: str, text_col: str,
     W = Window
     doc = F.col(id_col)
     text = F.col(text_col)
-    # the per-char gram fan-out is the heaviest map in the repo — an
-    # under-split probe corpus must not serialize it (widen_undersplit
-    # no-ops on well-split production inputs)
-    base = widen_undersplit(df) \
+    base = df \
         .select(doc.alias("doc"), text.alias("_text")) \
         .where(F.trim("_text") != "")
 
@@ -852,9 +835,6 @@ def canonical_keep(df: DataFrame, id_col: str, text_col: str,
 
     Returns ``(doc, cluster, quality, keep)``.
     """
-    # widen an under-split batch input before the tokenizing map
-    # (no-op when well-split or streaming)
-    df = widen_undersplit(df)
     from paperslicer_spark.functions.text_stats import word_count
 
     if quality_expr is None:
@@ -897,9 +877,6 @@ def ngram_novelty(df: DataFrame, id_col: str, text_col: str,
     Returns ``(doc, n_grams, seen_frac)`` with ``seen_frac`` rounded
     to 6dp for oracle parity.
     """
-    # widen an under-split batch input before the tokenizing map
-    # (no-op when well-split or streaming)
-    df = widen_undersplit(df)
     g = df.select(
         F.col(id_col).alias("doc"),
         F.explode(shingles(F.col(text_col), n)).alias("s"),
@@ -936,9 +913,6 @@ def leakage_safe_split(df: DataFrame, id_col: str, text_col: str,
     DUPLICATION-sized; the corpus is touched by one id join and a
     stateless map. Returns ``(doc, cluster, split)``.
     """
-    # widen an under-split batch input before the tokenizing map
-    # (no-op when well-split or streaming)
-    df = widen_undersplit(df)
     clusters = dup_clusters(df, id_col, text_col, n=n,
                             num_hashes=num_hashes, bands=bands)
     labeled = (
@@ -971,9 +945,6 @@ def source_overlap(df: DataFrame, id_col: str, text_col: str,
     argument) — never corpus×corpus. Output ``(source_a, source_b,
     n_pairs, n_clusters)`` with source_a <= source_b.
     """
-    # widen an under-split batch input before the tokenizing map
-    # (no-op when well-split or streaming)
-    df = widen_undersplit(df)
     clusters = dup_clusters(df, id_col, text_col, n=n,
                             num_hashes=num_hashes, bands=bands)
     labeled = (

@@ -19,8 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from paperslicer_spark.functions.text_stats import (tokens, widen_undersplit,
-                                                    word_count)
+from paperslicer_spark.functions.text_stats import tokens, word_count
 
 
 def bm25_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
@@ -42,7 +41,7 @@ def bm25_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     (set-of-terms semantics, as Lucene's boolean-OR of unique terms).
     """
     base = (
-        widen_undersplit(corpus).where(F.trim(F.col(text_col)) != "")
+        corpus.where(F.trim(F.col(text_col)) != "")
         .select(F.col(id_col).alias("doc"),
                 F.col(text_col).alias("_text"),
                 word_count(F.col(text_col)).cast("double").alias("dl"))

@@ -1,11 +1,11 @@
-"""Dump .explain('formatted') for the round-6 optimization targets.
+"""Dump .explain('formatted') for the bench entries of one round.
 
-Usage: python scripts/dump_plans_r06.py <before|after> [name ...]
+Usage: python scripts/dump_plans.py <round> <tag> [name ...]
 
-Writes plans/r06/<name>_<tag>.txt for each bench entry (the 5
-extraction paths + the 10 registered bench queries) plus any extra
-registered query names passed on the command line. Read-only —
-plans are captured without executing the queries.
+Writes plans/<round>/<name>_<tag>.txt (e.g. ``r07 before``) for each
+bench entry (the 5 extraction paths + the 10 registered bench
+queries) plus any extra registered query names passed on the command
+line. Read-only — plans are captured without executing the queries.
 """
 
 from __future__ import annotations
@@ -28,7 +28,6 @@ from paperslicer_spark.operators.spans import extract_turn_spans
 from paperslicer_spark.session import get_spark
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-OUT = os.path.join(REPO, "plans", "r06")
 
 BENCH_QUERIES = [
     "q01_pricing_summary", "q05_priority_concat", "q11_jaccard_pairs",
@@ -39,14 +38,16 @@ BENCH_QUERIES = [
 
 
 def main():
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    extra = sys.argv[2:]
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    rnd, tag, extra = sys.argv[1], sys.argv[2], sys.argv[3:]
+    out = os.path.join(REPO, "plans", rnd)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.1
     n_docs = max(int(100000 * sf), 200)
-    os.makedirs(OUT, exist_ok=True)
+    os.makedirs(out, exist_ok=True)
 
-    spark = get_spark(app_name="plans-r06", master="local[4]")
+    spark = get_spark(app_name=f"plans-{rnd}", master="local[4]")
     spark.sparkContext.setLogLevel("ERROR")
 
     corpus = os.path.join(REPO, ".bench_cache", f"transcripts_sf{sf}_n{n_docs}")
@@ -74,7 +75,7 @@ def main():
                 .ExplainMode.fromString("formatted"))
         except Exception as e:  # noqa: BLE001
             plan = f"PLAN CAPTURE FAILED: {type(e).__name__}: {e}"
-        path = os.path.join(OUT, f"{name}_{tag}.txt")
+        path = os.path.join(out, f"{name}_{tag}.txt")
         with open(path, "w", encoding="utf-8") as f:
             f.write(plan)
         print(f"{name:34s} -> {os.path.relpath(path, REPO)}")

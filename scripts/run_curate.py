@@ -83,6 +83,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from paperslicer_spark.functions.text_stats import widen_undersplit
     from paperslicer_spark.operators.curation import (
         chunk_documents, gopher_quality, pack_sequences,
         stratified_sample)
@@ -92,7 +93,9 @@ def main() -> None:
     rates = {k: float(v) for k, v in
              (kv.split("=") for kv in args.rates.split(",") if kv)}
     spark = get_spark(app_name="paperslicer-curate")
-    docs = spark.read.parquet(args.input)
+    # every corpus read is widened here; the curation operators never
+    # widen (an under-split input would run them at scan parallelism)
+    docs = widen_undersplit(spark.read.parquet(args.input))
     out = args.output
     q_dir, c_dir = os.path.join(out, "quality"), os.path.join(out, "clusters")
     k_dir, m_dir = os.path.join(out, "keep"), os.path.join(out, "metrics")
@@ -117,7 +120,7 @@ def main() -> None:
                  "n_redacted"), args.id_col)
              .write.mode("overwrite").parquet(s_dir))
             ran.append("scrub")
-        docs = spark.read.parquet(s_dir)
+        docs = widen_undersplit(spark.read.parquet(s_dir))
 
     if args.bench_input:
         # stage 0b: benchmark decontamination — a keep-list of docs
@@ -127,7 +130,7 @@ def main() -> None:
         if _done(spark, d_dir):
             skipped.append("decontaminate")
         else:
-            bench = spark.read.parquet(args.bench_input)
+            bench = widen_undersplit(spark.read.parquet(args.bench_input))
             hits = decontaminate(
                 docs, bench, args.id_col, args.text_col, n=4,
                 min_shared=args.decontaminate_min_shared,

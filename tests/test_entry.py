@@ -6,6 +6,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from scripts.check_oracles import TABLES, _rows_key
 
 SF001 = "/root/testdata/sf0.001"
 HAS_TESTDATA = os.path.exists(os.path.join(SF001, "documents.parquet"))
@@ -32,25 +33,49 @@ def test_queries_have_oracles_or_are_extraction():
         assert name in oracles or name.startswith("x"), name
 
 
-@pytest.mark.parametrize("qname", ["q19_canonical_headings", "q07_text_stats"])
+@pytest.mark.parametrize("qname", ["q19_canonical_headings", "q07_text_stats",
+                                   "q11_jaccard_pairs", "x27_gopher_quality"])
 def test_sampled_oracle_parity(spark, qname):
-    """Cheap inline version of scripts/check_oracles.py for two
-    representative queries (full sweep runs in the driver)."""
+    """Cheap inline version of scripts/check_oracles.py for a few
+    representative queries, through its strict comparator."""
     sdf = entrymod.queries()[qname](spark, SF001).toPandas()
     con = duckdb.connect()
-    for t in ["documents"]:
+    for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF001}/{t}.parquet'")
     odf = con.sql(entrymod.oracle_sql()[qname]).df()
-    cols = sorted(sdf.columns)
-    assert cols == sorted(odf.columns)
+    assert sorted(sdf.columns) == sorted(odf.columns)
+    assert _rows_key(sdf) == _rows_key(odf)
 
-    def key(df):
-        return sorted(
-            "\x1f".join(f"{v:.9g}" if isinstance(v, float) else str(v)
-                        for v in row)
-            for row in df[cols].itertuples(index=False, name=None))
 
-    assert key(sdf) == key(odf)
+def _round_robin_children(df):
+    """Child line of every round-robin exchange in ``df``'s physical
+    plan (before AQE and columnar transitions)."""
+    lines = df._jdf.queryExecution().sparkPlan().toString().splitlines()
+    return [lines[i + 1].strip() for i, line in enumerate(lines)
+            if "RoundRobinPartitioning" in line]
+
+
+def test_corpus_reader_is_the_only_widen(spark):
+    """Input splitting is decided once, where the corpus is read: the
+    corpus reader widens the single-file table right above its scan,
+    the plain table reader (``documents`` included) reads raw, and
+    operators never add a round-robin exchange of their own (not even
+    over a one-partition frame)."""
+    from paperslicer_spark.operators.curation import gopher_quality
+    from paperslicer_spark.operators.dedup import ngram_jaccard_pairs
+
+    [child] = _round_robin_children(entrymod._corpus(spark, SF001))
+    assert child.startswith("+- FileScan parquet"), child
+    for name in ("lineitem", "documents"):
+        assert _round_robin_children(entrymod._t(spark, SF001, name)) == []
+
+    one = spark.read.parquet(f"{SF001}/documents.parquet").coalesce(1)
+    assert _round_robin_children(
+        ngram_jaccard_pairs(one, "doc_id", "text")) == []
+    assert _round_robin_children(gopher_quality(one, "doc_id", "text")) == []
+
+    x52 = entrymod.queries()["x52_c4_line_filter"](spark, SF001)
+    assert len(_round_robin_children(x52)) == 1
 
 
 def test_no_query_emits_array_or_map_columns(spark):
