@@ -574,10 +574,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def x29_curated_keep(spark, sf):
         # end-to-end curation: quality pass ∧ dup-cluster
-        # representative ∧ stratified sample (x27 ∧ x26 ∧ x28 fused)
+        # representative ∧ stratified sample (x27 ∧ x26 ∧ x28 fused).
+        # Raw read: Spark pushes the Gopher keep filter through a
+        # round-robin exchange onto the scan, so _corpus's exchange
+        # would only reshuffle the output rows above the anti join.
         from paperslicer_spark.operators.curation import curated_keep
         return curated_keep(
-            _corpus(spark, sf), "doc_id", "text", "lang",
+            _t(spark, sf, "documents"), "doc_id", "text", "lang",
             rates={"en": 0.5, "de": 0.25, "fr": 0.25, "es": 0.25},
             default_rate=0.1,
         ).select("doc_id", "lang", "bucket")

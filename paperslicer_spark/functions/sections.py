@@ -107,10 +107,6 @@ def canonical_section_name(name: str) -> str:
     return n.replace(" ", "_")
 
 
-def is_non_content(key: str) -> bool:
-    return key in non_content_keys()
-
-
 # ---------------------------------------------------------------------------
 # Spark Column variant (JVM-side; used by queries that already have a
 # heading column and want to avoid any Python transition).

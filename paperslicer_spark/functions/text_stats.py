@@ -30,8 +30,8 @@ def tokens(col: Column) -> Column:
 
 
 def bind(value: Column, fn) -> Column:
-    """Let-binding for Spark SQL expressions: evaluate ``value`` ONCE
-    per row and pass the materialized result to ``fn``.
+    """Let-binding for Spark SQL expressions: hand ``fn`` a lambda
+    variable bound to ``value`` instead of the expression itself.
 
     Catalyst does no common-subexpression elimination inside
     higher-order-function lambdas — an outer expression referenced in
@@ -39,8 +39,16 @@ def bind(value: Column, fn) -> Column:
     computed token array inside ``F.transform`` re-runs the split for
     every window start: O(len²) per row (measured 5x on the shingle
     scan at sf0.1; the round-3 gopher run-starts form was the same
-    trap). ``transform(array(value), v -> fn(v))[1]`` forces one
-    evaluation and hands the lambda a bound variable instead.
+    trap). ``transform(array(value), v -> fn(v))[1]`` evaluates
+    ``value`` once per ``bind`` call, so inside ``fn`` there is no
+    per-element re-split.
+
+    That is the whole guarantee. Each reference to a column built
+    from a ``bind`` result is resolved again with fresh lambda
+    variables, so a select that reads N fields of one bound struct
+    computes the struct N times (x27's plan holds 7 copies of the
+    Gopher stats struct). A two-step select (materialize the struct,
+    then read its fields) is the way to share it.
     """
     return F.element_at(F.transform(F.array(value), fn), 1)
 
@@ -210,25 +218,6 @@ def rolling_fingerprint(col: Column, window: int = 8, keep: int = 4,
             F.array_join(F.transform(smallest, lambda x: x.cast("string")),
                          "-"))
     return bind(F.substring(col, 1, max_chars), build)
-
-
-def positional_char_match(a: str, b: str) -> float:
-    """F12 (validation-only, plain Python): positional char-match ratio
-    ``matches / longer_len`` (reference ``validate_extractions.py:44-59``)."""
-    if not a and not b:
-        return 1.0
-    if not a or not b:
-        return 0.0
-    matches = sum(1 for x, y in zip(a, b) if x == y)
-    return matches / max(len(a), len(b))
-
-
-def fuzzy_ratio(a: str, b: str) -> float:
-    """F12: difflib SequenceMatcher ratio (test-harness path,
-    ``tests/test_extraction_validation.py:50-67``)."""
-    import difflib
-
-    return difflib.SequenceMatcher(None, a or "", b or "").ratio()
 
 
 def shingles(col: Column, n: int = 3) -> Column:

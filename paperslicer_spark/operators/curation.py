@@ -441,81 +441,6 @@ def boilerplate_strip(df: DataFrame, id_col: str, text_col: str,
     )
 
 
-def rule_funnel(df: DataFrame, rules: list[tuple[str, "F.Column"]]
-                ) -> DataFrame:
-    """Filter-funnel attribution report — the observability query a
-    curation pipeline runs alongside its keep/drop gates: for each
-    rule (in pipeline order), how many documents reach it, how many
-    it rejects, and how many it UNIQUELY rejects (no other rule would
-    have caught them — the rule's marginal value; a rule with zero
-    unique rejections is dead weight).
-
-    ``rules`` is the ordered ``(name, keep_predicate)`` list — the
-    same predicates the real gate applies, so the report can never
-    drift from the pipeline (single source of truth).
-
-    Output, one row per rule plus a final ``__survivors__`` row:
-    ``(step, rule, n_reaching, n_rejected, n_rejected_unique,
-    pct_of_input)`` — ``n_reaching`` counts rows that passed every
-    earlier rule (sequential semantics), ``pct_of_input`` is
-    ``n_rejected / corpus`` round(9).  The survivors row carries the
-    end-to-end pass count in ``n_reaching``.
-
-    Scale: ONE corpus pass — every predicate evaluates as a codegen
-    column in the same projection and all counters are conditional
-    sums in a single map-side-combined global aggregate (one 1-row
-    partial per partition); the corpus is never shuffled.  Adding a
-    rule adds a column, not a pass.
-    """
-    if not rules:
-        raise ValueError("rule_funnel needs at least one rule")
-    names = [n for n, _ in rules]
-    if len(set(names)) != len(names):
-        raise ValueError(f"duplicate rule names: {names}")
-    flags = df.select(
-        *[p.cast("boolean").alias(f"_k_{i}")
-          for i, (_n, p) in enumerate(rules)])
-    # NULL predicate = reject (a quality rule that can't evaluate
-    # fails closed) — coalesce makes the arithmetic total
-    ks = [F.coalesce(F.col(f"_k_{i}"), F.lit(False))
-          for i in range(len(rules))]
-    aggs = [F.count("*").alias("_total")]
-    for i in range(len(rules)):
-        reach = None
-        for j in range(i):
-            reach = ks[j] if reach is None else (reach & ks[j])
-        reach = F.lit(True) if reach is None else reach
-        others = [k for j, k in enumerate(ks) if j != i]
-        all_others = others[0] if others else F.lit(True)
-        for o in others[1:]:
-            all_others = all_others & o
-        aggs += [
-            F.sum(reach.cast("bigint")).alias(f"_reach_{i}"),
-            F.sum((reach & ~ks[i]).cast("bigint")).alias(f"_rej_{i}"),
-            F.sum((~ks[i] & all_others).cast("bigint"))
-            .alias(f"_uniq_{i}"),
-        ]
-    surv = ks[0]
-    for k in ks[1:]:
-        surv = surv & k
-    aggs.append(F.sum(surv.cast("bigint")).alias("_surv"))
-    # materialize the 1-row counter relation driver-side: selecting a
-    # union branch per rule off the lazy agg would re-run the corpus
-    # aggregate once PER BRANCH (the rescans-subplan trap); this is
-    # the documented tiny-relation collect exception (rules-sized)
-    r = flags.agg(*aggs).collect()[0]
-    total = r["_total"] or 1
-    rows = [(i + 1, name, r[f"_reach_{i}"], r[f"_rej_{i}"],
-             r[f"_uniq_{i}"], round(r[f"_rej_{i}"] / total, 9))
-            for i, name in enumerate(names)]
-    rows.append((len(rules) + 1, "__survivors__", r["_surv"], 0, 0,
-                 round(r["_surv"] / total, 9)))
-    return df.sparkSession.createDataFrame(
-        rows, "step int, rule string, n_reaching bigint, "
-              "n_rejected bigint, n_rejected_unique bigint, "
-              "pct_of_input double")
-
-
 def mixture_waterfill(sources: DataFrame, budget: int,
                       source_col: str = "source",
                       avail_col: str = "n_tokens",
@@ -595,81 +520,6 @@ def apply_mixture(df: DataFrame, rates: DataFrame, source_col: str,
                     source_col)
             .where(bucket < thresh)
             .drop("rate"))
-
-
-def contrastive_pairs(assign: DataFrame, id_col: str, cluster_col: str,
-                      n_buckets: int = 1024,
-                      salt: str = "contrast:") -> DataFrame:
-    """Mine (anchor, positive, negative) training triples from a
-    cluster assignment — the step that turns near-dup clusters
-    (connected components, SemDeDup/kmeans cells) into contrastive-
-    learning data: positives are same-cluster neighbors, negatives
-    are corpus draws from a different cluster.
-
-    Fully deterministic (seeded-md5 orders, no ``rand()``):
-    - positive: within each cluster of size ≥ 2, members form a ring
-      in ``(md5(salt||id), id)`` order; each anchor's positive is its
-      ring successor (every member of an eligible cluster yields
-      exactly one triple).
-    - negative: ids are hashed into ``n_buckets`` buckets; within a
-      bucket's own seeded order, the anchor takes the first of its
-      next two successors (wrapping to the bucket head) that belongs
-      to a DIFFERENT cluster — anchors whose three candidates are all
-      same-cluster are dropped (only happens when a bucket is
-      dominated by one cluster; shrink ``n_buckets`` if that matters).
-
-    Output: ``(anchor, cluster, positive, negative)``.
-
-    Scale: two partitioned window sorts (cluster ring, bucket ring) +
-    one co-partitioned self-join of ring metadata — no global window,
-    no crossJoin; worst skew is the largest cluster / hottest bucket,
-    both bounded (clusters by the dedup upstream, buckets by
-    ``corpus / n_buckets``).
-    """
-    from pyspark.sql import Window
-
-    # a NULL cluster is "unassigned", not a cluster: those rows can
-    # neither anchor a positive nor serve as a verified negative
-    ids = (assign.where(F.col(cluster_col).isNotNull())
-           .select(F.col(id_col).alias("anchor"),
-                   F.col(cluster_col).alias("cluster")))
-    h = F.md5(F.concat(F.lit(salt), F.col("anchor").cast("string")))
-
-    wc = Window.partitionBy("cluster").orderBy(h, "anchor")
-    full = wc.rowsBetween(Window.unboundedPreceding,
-                          Window.unboundedFollowing)
-    pos = (ids
-           .withColumn("_sz", F.count("*").over(full))
-           .where(F.col("_sz") >= 2)
-           .withColumn("positive",
-                       F.coalesce(F.lead("anchor").over(wc),
-                                  F.first("anchor").over(full)))
-           .select("anchor", "cluster", "positive"))
-
-    # bucket hash = the engine's shared md5_bigint (NOT xxhash64,
-    # which DuckDB cannot reproduce — the x09/x41 cannot-drift rule)
-    bucket = F.pmod(
-        md5_bigint(F.col("anchor").cast("string"), salt=salt + "b:"),
-        F.lit(n_buckets))
-    wb = Window.partitionBy("_b").orderBy(h, "anchor")
-    fullb = wb.rowsBetween(Window.unboundedPreceding,
-                           Window.unboundedFollowing)
-    ringed = (ids.withColumn("_b", bucket)
-              .withColumn("_c1", F.lead("anchor", 1).over(wb))
-              .withColumn("_k1", F.lead("cluster", 1).over(wb))
-              .withColumn("_c2", F.lead("anchor", 2).over(wb))
-              .withColumn("_k2", F.lead("cluster", 2).over(wb))
-              .withColumn("_c3", F.first("anchor").over(fullb))
-              .withColumn("_k3", F.first("cluster").over(fullb)))
-    neg = ringed.select(
-        "anchor",
-        F.when(F.col("_k1") != F.col("cluster"), F.col("_c1"))
-         .when(F.col("_k2") != F.col("cluster"), F.col("_c2"))
-         .when(F.col("_k3") != F.col("cluster"), F.col("_c3"))
-         .alias("negative"))
-    return (pos.join(neg, "anchor")
-            .where(F.col("negative").isNotNull())
-            .select("anchor", "cluster", "positive", "negative"))
 
 
 def exact_k_sample(df: DataFrame, key_col: str, strata_col: str,
@@ -1048,7 +898,6 @@ def epoch_mix(df: DataFrame, strata_col: str, token_expr,
 
 def hashed_classifier_score(df: DataFrame, id_col: str, text_col: str,
                             dim: int = 4096, threshold: float = 0.0,
-                            weights: DataFrame | None = None,
                             salt: str = "w:") -> DataFrame:
     """fastText-style linear quality classifier over hashed
     bag-of-words features (the CCNet / DCLM "model-based filtering"
@@ -1058,16 +907,12 @@ def hashed_classifier_score(df: DataFrame, id_col: str, text_col: str,
     Per doc: each token hashes to one of ``dim`` feature buckets; the
     document score is the mean bucket weight, ``keep`` is a threshold
     on that mean. Weights are INTEGERS (derived ``md5(salt||bucket) %
-    2001 - 1000`` when no ``weights`` relation is given), so the
-    per-doc sum is exact bigint arithmetic and the only float op is
-    one final division — no cross-engine summation-order risk.
+    2001 - 1000``), so the per-doc sum is exact bigint arithmetic and
+    the only float op is one final division — no cross-engine
+    summation-order risk.
 
-    Scale shape: the default path is a ZERO-SHUFFLE map — one
-    ``F.aggregate`` pass over the token array computes the sum
-    in-row. A real trained model is a ``(bucket, w)`` relation passed
-    via ``weights`` (≤ ``dim`` rows → broadcast hash join on the
-    exploded tokens + one groupBy(doc) shuffle); the two paths are
-    equality-tested.
+    Scale shape: a ZERO-SHUFFLE map — one ``F.aggregate`` pass over
+    the token array computes the sum in-row.
     """
     def bucket_of(tok):
         return F.pmod(md5_bigint(tok, hex_chars=7), F.lit(dim))
@@ -1079,29 +924,14 @@ def hashed_classifier_score(df: DataFrame, id_col: str, text_col: str,
                       F.lit(2001)) - F.lit(1000)
 
     n = F.size(F.col("_toks"))
-    if weights is None:
-        score = F.aggregate(
-            F.col("_toks"), F.lit(0).cast("bigint"),
-            lambda acc, t: acc + weight_of(bucket_of(t)))
-        scored = (
-            df.withColumn("_toks", tokens(F.lower(F.col(text_col))))
-            .select(F.col(id_col).alias("doc"),
-                    n.alias("n_tokens"), score.alias("score_raw"))
-        )
-    else:
-        ex = (
-            df.withColumn("_toks", tokens(F.lower(F.col(text_col))))
-            .select(F.col(id_col).alias("doc"),
-                    F.explode("_toks").alias("_t"))
-            .select("doc", bucket_of(F.col("_t")).alias("bucket"))
-        )
-        scored = (
-            ex.join(F.broadcast(weights), "bucket", "left")
-            .groupBy("doc")
-            .agg(F.count("*").alias("n_tokens"),
-                 F.sum(F.coalesce(F.col("w"), F.lit(0)))
-                 .cast("bigint").alias("score_raw"))
-        )
+    score = F.aggregate(
+        F.col("_toks"), F.lit(0).cast("bigint"),
+        lambda acc, t: acc + weight_of(bucket_of(t)))
+    scored = (
+        df.withColumn("_toks", tokens(F.lower(F.col(text_col))))
+        .select(F.col(id_col).alias("doc"),
+                n.alias("n_tokens"), score.alias("score_raw"))
+    )
     mean_w = F.when(F.col("n_tokens") > 0,
                     F.round(F.col("score_raw") /
                             F.col("n_tokens"), 6))
@@ -1110,20 +940,6 @@ def hashed_classifier_score(df: DataFrame, id_col: str, text_col: str,
         F.coalesce(F.col("score_raw") >
                    F.lit(float(threshold)) * F.col("n_tokens"),
                    F.lit(False)).alias("keep"))
-
-
-def classifier_weights(spark, dim: int = 4096,
-                       salt: str = "w:") -> DataFrame:
-    """Materialize :func:`hashed_classifier_score`'s derived weights
-    as the ``(bucket, w)`` relation a real trained model would be —
-    the broadcast-join serving path's input (equality-tested against
-    the zero-shuffle derived path)."""
-    b = F.col("id").cast("int")
-    w = F.pmod(md5_bigint(F.concat(F.lit(salt), b.cast("string")),
-                          hex_chars=7),
-               F.lit(2001)) - F.lit(1000)
-    return spark.range(dim).select(b.alias("bucket"),
-                                   w.cast("bigint").alias("w"))
 
 
 def dsir_weights(df: DataFrame, target: DataFrame, id_col: str,

@@ -422,48 +422,6 @@ def validate_table_regions(assets: DataFrame,
     return assets.mapInPandas(run, schema=assets.schema)
 
 
-def resize_assets(assets: DataFrame, max_side: int = 32) -> DataFrame:
-    """Resize stage: fake codec does nearest-neighbor downsample on its
-    pixel buffer; a real implementation swaps in PIL here."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            cols = {k: [] for k in ["asset_id", "conv_id", "kind",
-                                    "payload", "meta"]}
-            for aid, cid, kind, payload, meta in zip(
-                pdf["asset_id"], pdf["conv_id"], pdf["kind"],
-                pdf["payload"], pdf["meta"]
-            ):
-                dec = decode_image(bytes(payload))
-                if dec is None:
-                    continue
-                w, h, fmt, px = dec
-                scale = max(max(w, h) / max_side, 1.0)
-                nw, nh = max(int(w / scale), 1), max(int(h / scale), 1)
-                grid = px.reshape(h, w)[
-                    np.linspace(0, h - 1, nh).astype(int)][:,
-                    np.linspace(0, w - 1, nw).astype(int)]
-                if bytes(payload).startswith(_PNG_MAGIC):
-                    # real PNG in → real PNG out (stdlib encoder)
-                    out = encode_png(grid.astype("uint8"))
-                else:
-                    out = (_MAGIC
-                           + struct.pack("<HHB", nw, nh, _FMTS.index(fmt))
-                           + grid.astype("uint8").tobytes())
-                cols["asset_id"].append(int(aid))
-                cols["conv_id"].append(cid)
-                cols["kind"].append(kind)
-                cols["payload"].append(out)
-                cols["meta"].append({"width": nw, "height": nh,
-                                     "format": fmt, "n_bytes": len(out)})
-            yield pd.DataFrame(cols)
-
-    return assets.mapInPandas(run, schema=ASSET_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # video: fake frame container + uniform temporal frame sampling
 # ---------------------------------------------------------------------------

@@ -259,38 +259,6 @@ def cosine_dup_pairs(corpus: DataFrame, threshold: float = 0.9,
     )
 
 
-def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             bits: int = 8) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's bucket.
-
-    Recall < 1 by construction; the exactness/scale trade is the point.
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        sign_lsh_bucket(F.col(vec_col), bits).alias("bucket"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        sign_lsh_bucket(F.col(vec_col), bits).alias("bucket"),
-    )
-    scored = (
-        F.broadcast(q).join(c, "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
-
-
 def quantize_embeddings(df: DataFrame, id_col: str = "vec_id",
                         vec_col: str = "embedding") -> DataFrame:
     """Scalar int8 quantization with per-vector max-abs scale — the

@@ -154,7 +154,9 @@ def extract_turn_spans(turns: DataFrame) -> DataFrame:
                 if text is None:
                     continue
                 _, units, _ = turn_units(text)
-                ti = int(turn_idx)
+                # a NULL turn_idx arrives as NaN (the column turns float):
+                # its units carry a NULL turn_idx, never a task failure
+                ti = int(turn_idx) if turn_idx == turn_idx else None
                 for i, u in enumerate(units):
                     conv_ids.append(conv_id)
                     turn_idxs.append(ti)

@@ -189,95 +189,6 @@ def rolling_agg(df: DataFrame, key_col: str, ts_col: str, value_col: str,
     )
 
 
-def asof_join_bucketed(left: DataFrame, right: DataFrame, on: str,
-                       ts_col: str = "ts",
-                       right_cols: list[str] | None = None,
-                       suffix: str = "_right",
-                       bucket_seconds: float = 3600.0,
-                       strict: bool = False) -> DataFrame:
-    """Skew-safe as-of join: row-identical to :func:`asof_join`, but
-    the per-key carry runs in TWO phases so a pathological hot key no
-    longer serializes on one core (measured 8.7x wall-time penalty at
-    a 10M-row corpus where one key owns 80% — BENCH/temporal_skew.json
-    "hot80").
-
-    Phase 1: window per ``(key, floor(ts/bucket))`` — hot-key work
-    parallelizes across its time buckets. Phase 2: the last right row
-    of each bucket forms a per-(key, bucket) relation (ONE row per
-    bucket), whose per-key prefix-carry chain is O(#buckets), not
-    O(#rows); its result joins back on (key, bucket) — same exchange.
-    A left row's match = its within-bucket carry, else the carry-in
-    from strictly earlier buckets. Equal timestamps always share a
-    bucket, so the strict/tie semantics are phase-1-local and
-    identical to asof_join's (differential-tested).
-
-    Pick ``bucket_seconds`` so a hot key's per-bucket row count fits a
-    task comfortably; #buckets per key only needs to exceed the
-    cluster's cores for full spread.
-    """
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c not in (on, ts_col)]
-    carried = [ts_col] + right_cols
-    bucket_us = int(round(bucket_seconds * 1_000_000))
-    assert bucket_us > 0
-
-    lhs = left.select(
-        F.col(on), F.col(ts_col).alias("_ts"),
-        F.lit(1).alias("_side"),
-        F.struct(*[F.col(c) for c in left.columns]).alias("_l"),
-        F.lit(None).cast(
-            right.select(F.struct(*[F.col(c) for c in carried])
-                         .alias("s")).schema["s"].dataType
-        ).alias("_r"),
-    )
-    rhs = right.select(
-        F.col(on), F.col(ts_col).alias("_ts"),
-        F.lit(0).alias("_side"),
-        F.lit(None).cast(lhs.schema["_l"].dataType).alias("_l"),
-        F.struct(*[F.col(c) for c in carried]).alias("_r"),
-    )
-    ts_us = F.unix_micros(F.col("_ts").cast("timestamp"))
-    bkt = ((ts_us - F.pmod(ts_us, F.lit(bucket_us))) / F.lit(bucket_us)) \
-        .cast("bigint")
-    u = lhs.unionByName(rhs).withColumn("_bkt", bkt)
-
-    side_order = F.col("_side").desc() if strict else F.col("_side").asc()
-    w_in = (
-        Window.partitionBy(on, "_bkt")
-        .orderBy(F.col("_ts").asc(), side_order, F.col("_r").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    within = u.withColumn("_m", F.last("_r", ignorenulls=True).over(w_in))
-
-    # phase 2: one row per (key, bucket) carrying that bucket's last
-    # right (lexicographic max of (ts, payload) = the window's order
-    # among rights); buckets holding only left rows contribute a NULL
-    # and the ignorenulls carry walks over them
-    boundary = (
-        u.groupBy(on, "_bkt")
-        .agg(F.max(F.when(F.col("_r").isNotNull(),
-                          F.struct(F.col("_ts"), F.col("_r"))))
-             .alias("_lastr"))
-    )
-    w_carry = Window.partitionBy(on).orderBy("_bkt") \
-        .rowsBetween(Window.unboundedPreceding, -1)
-    carry = boundary.select(
-        on, "_bkt",
-        F.last("_lastr", ignorenulls=True).over(w_carry)
-        .getField("_r").alias("_cin"))
-
-    matched = (
-        within.where(F.col("_side") == 1)
-        .join(carry, [on, "_bkt"])
-        .withColumn("_m2", F.coalesce(F.col("_m"), F.col("_cin")))
-    )
-    out_cols = [F.col(f"_l.{c}").alias(c) for c in left.columns]
-    out_cols.append(F.col(f"_m2.{ts_col}").alias(f"{ts_col}{suffix}"))
-    out_cols.extend(F.col(f"_m2.{c}").alias(f"{c}{suffix}")
-                    for c in right_cols)
-    return matched.select(*out_cols)
-
-
 def funnel_steps(df: DataFrame, user_col: str, ts_col: str,
                  type_col: str, steps: list[str]) -> DataFrame:
     """Ordered funnel analysis: how many users reach each step in order.

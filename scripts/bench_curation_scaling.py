@@ -238,38 +238,6 @@ def worker(cores: int) -> None:
 
         sec = best_of(_dhash_run)
         record("dhash", sec, n_assets)
-    if "boiler" in JOBS:
-        # round-5 op: CCNet boilerplate line strip — distinct-doc line
-        # frequency + anti-join + in-order rebuild, over synthesized
-        # 5-token lines (replica cliques share most lines, so the
-        # boilerplate set is large and the anti-join does real work)
-        from pyspark.sql import functions as F
-
-        from paperslicer_spark.functions.text_stats import bind
-        from paperslicer_spark.operators.curation import boilerplate_strip
-
-        fives_b = bind(
-            F.split(F.trim(F.col("text")), r"\s+"),
-            lambda t: F.transform(
-                F.sequence(F.lit(0), F.size(t) - 1, F.lit(5)),
-                lambda s: F.array_join(F.slice(t, s + 1, 5), " ")))
-        withl_b = docs.select(
-            "doc_id", F.array_join(fives_b, "\n").alias("text"))
-        sec = best_of(lambda: force(
-            boilerplate_strip(withl_b, "doc_id", "text",
-                              min_df=0.0, min_docs=5)))
-        record("boiler", sec, n_docs)
-    if "bpe" in JOBS:
-        # round-5 op: memoized BPE encode (merge table trained once on
-        # a slice, training excluded — encode is the corpus-scale part)
-        from paperslicer_spark.operators.tokenizer import (
-            bpe_encode_batch, bpe_train)
-
-        merges = [(r["left"], r["right"]) for r in bpe_train(
-            docs.sample(0.01, seed=7), "text", n_merges=32).collect()]
-        sec = best_of(lambda: force(
-            bpe_encode_batch(docs, "text", merges)))
-        record("bpe", sec, n_docs)
     if "lsh_pairs" in JOBS:
         sec = best_of(lambda: force(
             DD.minhash_lsh_pairs(docs, "doc_id", "text")))
@@ -305,8 +273,7 @@ def orchestrate() -> None:
     summary = {"cores": CORES, "ratio": ratio}
     for job in [j for j in ("quality", "lsh_pairs", "cluster", "c4", "repstats",
                             "pdedup", "decon", "substr", "bm25",
-                            "bigram", "cooc", "contain", "dhash",
-                            "boiler", "bpe")
+                            "bigram", "cooc", "contain", "dhash")
                 if j in JOBS]:
         t_lo = results[lo][f"{job}_sec"]
         t_hi = results[hi][f"{job}_sec"]

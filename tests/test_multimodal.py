@@ -1,4 +1,4 @@
-"""Multimodal binary columns: schema, decode plumbing, features, resize."""
+"""Multimodal binary columns: schema, decode plumbing, features."""
 
 import pytest
 
@@ -6,7 +6,6 @@ from paperslicer_spark.operators.multimodal import (
     decode_fake_image,
     encode_fake_image,
     extract_features,
-    resize_assets,
     synth_assets,
 )
 
@@ -40,13 +39,6 @@ def test_assets_schema_and_features(spark):
     for f in feats:
         assert len(f["features"]) == 8
         assert abs(sum(f["features"]) - 1.0) < 1e-5  # normalized histogram
-
-    small = resize_assets(assets, max_side=16).collect()
-    assert len(small) == 24
-    for s in small:
-        assert max(s["meta"]["width"], s["meta"]["height"]) <= 16
-        w, h, _, px = decode_fake_image(bytes(s["payload"]))
-        assert px.size == w * h
     assets.unpersist()
 
 
@@ -184,14 +176,14 @@ def test_png_codec_roundtrip_and_filters():
 
 
 def test_pixel_stages_on_real_png(spark):
-    """The pixel filters / validator / features / resize run on GENUINE
-    PNG payloads, same semantics as the fake codec (closing the last
+    """The pixel filters / validator / features run on GENUINE PNG
+    payloads, same semantics as the fake codec (closing the last
     'fake' in the media cascade)."""
     import numpy as np
 
     from paperslicer_spark.operators.multimodal import (
-        TableRegionValidator, decode_image, encode_png, extract_features,
-        filter_blank_lowink, resize_assets)
+        TableRegionValidator, encode_png, extract_features,
+        filter_blank_lowink)
 
     def png(fill=255, rect=None, w=256, h=256):
         px = np.full((h, w), fill, dtype=np.uint8)
@@ -222,12 +214,6 @@ def test_pixel_stages_on_real_png(spark):
         "meta struct<width:int,height:int,format:string,n_bytes:int>")
     feats = extract_features(assets, n_bins=8).collect()
     assert len(feats) == 1 and abs(sum(feats[0]["features"]) - 1.0) < 1e-5
-    small = resize_assets(assets, max_side=16).collect()
-    assert len(small) == 1
-    out = bytes(small[0]["payload"])
-    w, h, fmt, px = decode_image(out)
-    assert fmt == "png" and max(w, h) <= 16 and px.size == w * h
-    assert out.startswith(b"\x89PNG")  # PNG in → PNG out
 
 
 def test_mapping_suggestions(spark, tmp_path):

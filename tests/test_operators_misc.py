@@ -136,16 +136,13 @@ def test_simhash(docs):
 
 
 def test_similarity_topk(spark):
-    from paperslicer_spark.operators.similarity import brute_force_topk, lsh_topk
+    from paperslicer_spark.operators.similarity import brute_force_topk
 
     rows = [(i, [float(i == j) for j in range(8)]) for i in range(6)]
     rows.append((99, [1.0, 0.1, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     top = brute_force_topk(emb, emb.where("vec_id = 0"), k=1).collect()
     assert top[0]["neighbor_id"] == 99  # most-aligned vector wins
-    approx = lsh_topk(emb, emb.where("vec_id = 0"), k=3, bits=4).collect()
-    assert {r["neighbor_id"] for r in approx} <= {1, 2, 3, 4, 5, 99}
-    assert approx[0]["neighbor_id"] == 99  # same bucket (leading sign bits)
 
 
 def test_corpus_quality_and_scores(spark, corpus_path):
@@ -197,27 +194,17 @@ def test_partition_lineage(spark, corpus_path):
 
 def test_streaming_spans(spark, corpus_path, tmp_path):
     from paperslicer_spark.streaming.stream_extract import (
-        stream_turns, streaming_spans, streaming_turn_rates)
+        stream_turns, streaming_turn_rates)
 
     stream = stream_turns(spark, corpus_path)
     assert stream.isStreaming
-    q1 = (streaming_spans(stream).writeStream.format("memory")
-          .queryName("spans_mem").outputMode("append")
-          .option("checkpointLocation", str(tmp_path / "ck1")).start())
-    q1.processAllAvailable()
-    q1.stop()
-    n_stream = spark.sql("select count(*) c from spans_mem").collect()[0]["c"]
-    from paperslicer_spark.operators.spans import extract_turn_spans
-    n_batch = extract_turn_spans(spark.read.parquet(corpus_path)).count()
-    assert n_stream == n_batch
-
-    q2 = (streaming_turn_rates(stream).writeStream.format("memory")
-          .queryName("rates_mem").outputMode("append")
-          .option("checkpointLocation", str(tmp_path / "ck2")).start())
-    q2.processAllAvailable()
-    q2.stop()
-    # watermark append-mode may hold the tail window; completeness of the
-    # stateless path is asserted above — here just check schema + some rows
+    q = (streaming_turn_rates(stream).writeStream.format("memory")
+         .queryName("rates_mem").outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "ck")).start())
+    q.processAllAvailable()
+    q.stop()
+    # watermark append-mode may hold the tail window (late-data semantics
+    # are pinned by the next test) — here just check the schema
     rates = spark.sql("select * from rates_mem")
     assert set(rates.columns) == {"window_start", "window_end", "role",
                                   "n_turns", "n_chars"}
@@ -632,79 +619,6 @@ def test_asof_join_differential_vs_pandas_merge_asof(spark):
     assert len(got) == len(lrows)
 
 
-def test_streaming_session_window_stats(spark, tmp_path):
-    """session_window sessions close by watermark and match the batch
-    gaps-and-islands sessionization on the same data."""
-    import time
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from paperslicer_spark.streaming.stream_extract import (
-        stream_turns, streaming_session_stats)
-
-    src = tmp_path / "turns"
-    src.mkdir()
-    base = "2024-01-01 10:{m:02d}:00"
-    rows = []
-    # conv A: two sessions (gap > 5 min between minute 10 and 30)
-    for m, txt in ((0, "a1"), (2, "a2"), (10, "a3"), (30, "a4"), (31, "a5")):
-        rows.append(("A", m, "user", txt, "t", base.format(m=m)))
-    # conv B: one session
-    for m, txt in ((5, "b1"), (8, "b2")):
-        rows.append(("B", m, "user", txt, "t", base.format(m=m)))
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, "
-              "tool string, ts_s string") \
-        .select("conv_id", "turn_idx", "role", "text", "tool",
-                F.col("ts_s").cast("timestamp").alias("ts"))
-    df.coalesce(1).write.mode("overwrite").parquet(str(src / "f1"))
-    # a late watermark-advancing batch so every session closes
-    spark.createDataFrame(
-        [("Z", 0, "user", "zz", "t", "2024-01-01 12:00:00")],
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts_s string") \
-        .select("conv_id", "turn_idx", "role", "text", "tool",
-                F.col("ts_s").cast("timestamp").alias("ts")) \
-        .coalesce(1).write.mode("overwrite").parquet(str(src / "f2"))
-
-    stream = stream_turns(spark, str(src) + "/*")
-    q = (streaming_session_stats(stream).writeStream.format("memory")
-         .queryName("sess").outputMode("append").start())
-    try:
-        deadline = time.time() + 90
-        while time.time() < deadline:
-            q.processAllAvailable()
-            got = {(r["conv_id"], str(r["session_start"])[11:16],
-                    r["n_turns"], r["n_chars"])
-                   for r in spark.sql("select * from sess").collect()}
-            if len(got) >= 4:
-                break
-            time.sleep(1)
-    finally:
-        q.stop()
-    # sessions: A {10:00,10:02}, A {10:10} (8-min gap), A {10:30,10:31};
-    # B {10:05,10:08}; each closed by the 12:00 watermark-advancer
-    want = {("A", "10:00", 2, 4), ("A", "10:10", 1, 2),
-            ("A", "10:30", 2, 4), ("B", "10:05", 2, 4)}
-    assert want <= got
-
-    # batch parity: gaps-and-islands over the same rows yields the
-    # same (conv, first-ts, count, chars) sessions
-    w = Window.partitionBy("conv_id").orderBy("ts")
-    gap_flag = (F.unix_timestamp("ts")
-                - F.unix_timestamp(F.lag("ts").over(w)) > 300)
-    batch = (df.withColumn("_new", F.coalesce(gap_flag.cast("int"), F.lit(1)))
-             .withColumn("_sid", F.sum("_new").over(
-                 w.rowsBetween(Window.unboundedPreceding, 0)))
-             .groupBy("conv_id", "_sid")
-             .agg(F.min("ts").alias("t0"), F.count("*").alias("n"),
-                  F.sum(F.length("text")).alias("c")))
-    ref = {(r["conv_id"], str(r["t0"])[11:16], r["n"], r["c"])
-           for r in batch.collect()}
-    assert ref == want
-
-
 def test_exact_percentiles_ignores_nulls(spark):
     """NULL values must not shift ranks (round-4 ADVICE): percentiles
     match F.percentile / DuckDB quantile_cont, which ignore NULLs."""
@@ -804,36 +718,6 @@ def test_delta_dedup_flags(spark):
     assert not out[11]["keep"]
     assert out[12]["keep"] and not out[12]["exact_dup"] \
         and not out[12]["near_dup"]
-
-
-def test_asof_join_bucketed_equals_plain(spark):
-    """The skew-safe two-phase asof is row-identical to asof_join on
-    seeded random data, across bucket widths, both tie modes."""
-    import random
-
-    from paperslicer_spark.operators.temporal import (asof_join,
-                                                      asof_join_bucketed)
-
-    rng = random.Random(11)
-    rows_l = [(i, f"u{rng.randrange(5)}", float(rng.randrange(0, 5000)))
-              for i in range(400)]
-    rows_r = [(f"u{rng.randrange(5)}", float(rng.randrange(0, 5000)),
-               f"t{j}") for j in range(300)]
-    L = spark.createDataFrame(rows_l, "event_id long, user string, ts double")
-    R = spark.createDataFrame(rows_r, "user string, ts double, tag string")
-
-    def rowset(df):
-        return sorted((r["event_id"], r["ts_right"], r["tag_right"])
-                      for r in df.collect())
-
-    for strict in (False, True):
-        want = rowset(asof_join(L, R, on="user", ts_col="ts",
-                                strict=strict))
-        for bw in (1.0, 97.0, 1000.0, 10_000.0):
-            got = rowset(asof_join_bucketed(
-                L, R, on="user", ts_col="ts", bucket_seconds=bw,
-                strict=strict))
-            assert got == want, (strict, bw)
 
 
 def test_cms_sketch_bounds_and_merge(spark):

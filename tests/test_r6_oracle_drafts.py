@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from paperslicer_spark.operators.curation import (
-    apply_mixture, boilerplate_strip, mixture_waterfill, rule_funnel)
+    apply_mixture, boilerplate_strip, mixture_waterfill)
 from paperslicer_spark.operators.metrics import cohen_kappa
 
 pytestmark = pytest.mark.usefixtures("spark")
@@ -125,104 +125,6 @@ def test_oracle_kappa(spark, tmp_path):
     FROM totals t LEFT JOIN prod p USING (rater_a, rater_b)
     """
     _cmp(got, sql, tmp_path, {"ann": pdf_in})
-
-
-# ---------- rule_funnel ----------
-
-def test_oracle_funnel(spark, tmp_path):
-    rows = [(i, (i * 37) % 1000, ["en", "xx"][i % 5 == 0],
-             None if i % 11 == 0 else (i % 100) / 100)
-            for i in range(500)]
-    pdf_in = __import__("pandas").DataFrame(
-        rows, columns=["doc_id", "n_chars", "lang", "score"])
-    rules = [("min_len", F.col("n_chars") >= 100),
-             ("lang_en", F.col("lang") == "en"),
-             ("min_score", F.col("score") >= 0.3)]
-    got = rule_funnel(spark.createDataFrame(pdf_in), rules)
-    sql = """
-    WITH f AS (
-      SELECT coalesce(n_chars >= 100, false) AS k0,
-             coalesce(lang = 'en', false) AS k1,
-             coalesce(score >= 0.3, false) AS k2
-      FROM docs
-    ), agg AS (
-      SELECT count(*) AS total,
-        count(*) AS reach0,
-        sum(CASE WHEN NOT k0 THEN 1 ELSE 0 END) AS rej0,
-        sum(CASE WHEN NOT k0 AND k1 AND k2 THEN 1 ELSE 0 END) AS uniq0,
-        sum(CASE WHEN k0 THEN 1 ELSE 0 END) AS reach1,
-        sum(CASE WHEN k0 AND NOT k1 THEN 1 ELSE 0 END) AS rej1,
-        sum(CASE WHEN NOT k1 AND k0 AND k2 THEN 1 ELSE 0 END) AS uniq1,
-        sum(CASE WHEN k0 AND k1 THEN 1 ELSE 0 END) AS reach2,
-        sum(CASE WHEN k0 AND k1 AND NOT k2 THEN 1 ELSE 0 END) AS rej2,
-        sum(CASE WHEN NOT k2 AND k0 AND k1 THEN 1 ELSE 0 END) AS uniq2,
-        sum(CASE WHEN k0 AND k1 AND k2 THEN 1 ELSE 0 END) AS surv
-      FROM f
-    )
-    SELECT 1 AS step, 'min_len' AS rule, CAST(reach0 AS BIGINT) AS n_reaching,
-           CAST(rej0 AS BIGINT) AS n_rejected,
-           CAST(uniq0 AS BIGINT) AS n_rejected_unique,
-           round(rej0 / total, 9) AS pct_of_input FROM agg
-    UNION ALL
-    SELECT 2, 'lang_en', CAST(reach1 AS BIGINT), CAST(rej1 AS BIGINT),
-           CAST(uniq1 AS BIGINT), round(rej1 / total, 9) FROM agg
-    UNION ALL
-    SELECT 3, 'min_score', CAST(reach2 AS BIGINT), CAST(rej2 AS BIGINT),
-           CAST(uniq2 AS BIGINT), round(rej2 / total, 9) FROM agg
-    UNION ALL
-    SELECT 4, '__survivors__', CAST(surv AS BIGINT), 0, 0,
-           round(surv / total, 9) FROM agg
-    """
-    _cmp(got, sql, tmp_path, {"docs": pdf_in})
-
-
-# ---------- contrastive_pairs ----------
-
-def test_oracle_contrastive(spark, tmp_path):
-    from paperslicer_spark.operators.curation import contrastive_pairs
-    rows = [(i, f"c{(i * 13) % 7}") for i in range(400)]
-    pdf_in = __import__("pandas").DataFrame(
-        rows, columns=["doc_id", "cluster"])
-    got = contrastive_pairs(spark.createDataFrame(pdf_in),
-                            "doc_id", "cluster", n_buckets=8)
-    sql = """
-    WITH ids AS (
-      SELECT doc_id AS anchor, cluster,
-             md5('contrast:' || CAST(doc_id AS VARCHAR)) AS h,
-             CAST('0x' || substr(md5('contrast:b:' ||
-                  CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 8 AS b
-      FROM assign WHERE cluster IS NOT NULL
-    ), pos AS (
-      SELECT anchor, cluster,
-             coalesce(lead(anchor) OVER wc,
-                      first_value(anchor) OVER wc) AS positive,
-             count(*) OVER (PARTITION BY cluster) AS sz
-      FROM ids
-      WINDOW wc AS (PARTITION BY cluster ORDER BY h, anchor
-                    ROWS BETWEEN UNBOUNDED PRECEDING
-                    AND UNBOUNDED FOLLOWING)
-    ), ringed AS (
-      SELECT anchor, cluster,
-             lead(anchor, 1) OVER wb AS c1, lead(cluster, 1) OVER wb AS k1,
-             lead(anchor, 2) OVER wb AS c2, lead(cluster, 2) OVER wb AS k2,
-             first_value(anchor) OVER wb AS c3,
-             first_value(cluster) OVER wb AS k3
-      FROM ids
-      WINDOW wb AS (PARTITION BY b ORDER BY h, anchor
-                    ROWS BETWEEN UNBOUNDED PRECEDING
-                    AND UNBOUNDED FOLLOWING)
-    ), neg AS (
-      SELECT anchor,
-             CASE WHEN k1 <> cluster THEN c1
-                  WHEN k2 <> cluster THEN c2
-                  WHEN k3 <> cluster THEN c3 END AS negative
-      FROM ringed
-    )
-    SELECT p.anchor, p.cluster, p.positive, n.negative
-    FROM pos p JOIN neg n USING (anchor)
-    WHERE p.sz >= 2 AND n.negative IS NOT NULL
-    """
-    _cmp(got, sql, tmp_path, {"assign": pdf_in})
 
 
 # ---------- apply_mixture ----------

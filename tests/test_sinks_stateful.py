@@ -296,111 +296,3 @@ def test_stateful_assembly_stream(spark, corpus_path, tmp_path):
         assert r["title"] == b["title"]
         assert r["n_references"] == len(b["references"])
         assert r["n_sections"] == len(b["sections"]) + len(b["other_sections"])
-
-
-def test_streaming_dedup_redelivery(spark, tmp_path):
-    """At-least-once redelivery: the same turn rows written into two
-    micro-batch files collapse to one copy; genuinely distinct rows
-    (same key, different text) survive."""
-    import datetime as dt
-
-    from paperslicer_spark.streaming.stream_extract import (
-        stream_turns, streaming_dedup)
-
-    ts = dt.datetime(2026, 1, 1, 12, 0, 0)
-    rows = [
-        ("c1", 0, "user", "hello", "", ts),
-        ("c1", 1, "assistant", "world", "", ts),
-        ("c2", 0, "user", "other", "", ts),
-    ]
-    schema = ("conv_id string, turn_idx int, role string, text string, "
-              "tool string, ts timestamp")
-    src = tmp_path / "src"
-    src.mkdir()
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-        "overwrite").parquet(str(src / "f1"))
-    # second delivery: two exact replays + one conflicting rewrite
-    rows2 = [
-        ("c1", 0, "user", "hello", "", ts),              # exact replay
-        ("c2", 0, "user", "other", "", ts),              # exact replay
-        ("c2", 0, "user", "other EDITED", "", ts),       # distinct text
-    ]
-    spark.createDataFrame(rows2, schema).coalesce(1).write.mode(
-        "overwrite").parquet(str(src / "f2"))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    q = (streaming_dedup(stream).writeStream.format("memory")
-         .queryName("dedup_mem").outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck_dd")).start())
-    q.processAllAvailable()
-    q.stop()
-    got = sorted((r["conv_id"], r["turn_idx"], r["text"])
-                 for r in spark.sql("select * from dedup_mem").collect())
-    assert got == [
-        ("c1", 0, "hello"),
-        ("c1", 1, "world"),
-        ("c2", 0, "other"),
-        ("c2", 0, "other EDITED"),
-    ]
-
-
-def test_streaming_curation_funnel_batch_parity(spark, tmp_path):
-    """One readStream plan chaining dedup → quality gate → stratified
-    sample (round-4 VERDICT item #6) equals the identical funnel run
-    in batch over the union of the micro-batch files."""
-    import datetime as dt
-
-    from paperslicer_spark.streaming.stream_extract import curation_funnel
-
-    ts = dt.datetime(2026, 1, 1, 12, 0, 0)
-    good = ("the quick brown fox jumps over the lazy dog while seven "
-            "wizards brew bright potions near an old stone bridge")
-    spam = "buy now " * 12                       # top-bigram degenerate
-    short = "too short"
-    rows1 = [(f"d{i}", "user" if i % 2 else "bot",
-              good + f" variant {i}", "", ts) for i in range(8)]
-    rows1 += [("d8", "user", spam, "", ts), ("d9", "bot", short, "", ts)]
-    # second file: exact replays (must collapse) + one fresh doc +
-    # one same-id different-text rewrite (must survive as its own row)
-    rows2 = [rows1[0], rows1[3],
-             ("d10", "user", good + " variant 10", "", ts),
-             ("d0", "user", good + " rewritten zero", "", ts)]
-    schema = ("conv_id string, role string, text string, tool string, "
-              "ts timestamp")
-    src = tmp_path / "src"
-    src.mkdir()
-    spark.createDataFrame(rows1, schema).coalesce(1).write.parquet(
-        str(src / "f1"))
-    spark.createDataFrame(rows2, schema).coalesce(1).write.parquet(
-        str(src / "f2"))
-
-    kw = dict(id_col="conv_id", text_col="text", strata_col="role",
-              rates={"user": 1.0, "bot": 0.5}, min_words=5,
-              min_mean_word_len=1.0, max_mean_word_len=20.0,
-              min_frac_unique=0.3, max_frac_top_bigram=0.5)
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(src / "*")))
-    q = (curation_funnel(stream, **kw).writeStream.format("memory")
-         .queryName("funnel_mem").outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck_fn")).start())
-    q.processAllAvailable()
-    q.stop()
-    streamed = sorted(
-        (r["doc"], r["role"], r["word_count"]) for r in
-        spark.sql("select * from funnel_mem").collect())
-
-    batch_df = spark.read.parquet(str(src / "f1"), str(src / "f2"))
-    batch = sorted((r["doc"], r["role"], r["word_count"])
-                   for r in curation_funnel(batch_df, **kw).collect())
-    assert streamed == batch and len(streamed) > 4
-    docs = {d for d, _, _ in streamed}
-    assert "d8" not in docs and "d9" not in docs   # quality-gated
-    # replayed d0/d3 appear once; the d0 rewrite is a distinct row
-    assert sum(1 for d, _, _ in streamed if d == "d0") == 2
-    # the bot stratum is subsampled, users all kept
-    users_in = {f"d{i}" for i in range(8) if i % 2} | {"d10"}
-    assert users_in <= docs

@@ -158,6 +158,34 @@ def test_span_invariant(spark, turns):
         assert r["unit_text"] == r["turn_text"][r["char_start"]:r["char_end"]]
 
 
+def test_spans_null_turn_idx(spark, turns):
+    """A NULL turn_idx among normal turns is a NULL-keyed row, not a
+    task failure: that turn's units carry turn_idx NULL and every other
+    row is unchanged. All turns sit in one Arrow batch, so the NULL
+    turns the batch's int32 column into floats with a NaN."""
+    from pyspark.sql import functions as F
+
+    conv = turns.where(F.col("conv_id") == "conv00000000").coalesce(1)
+    base = extract_turn_spans(conv).collect()
+    hit = next(r["turn_idx"] for r in base)
+    nulled = conv.withColumn(
+        "turn_idx", F.when(F.col("turn_idx") != hit, F.col("turn_idx"))
+        .cast("int"))
+    got = extract_turn_spans(nulled).collect()
+
+    def key(r):
+        return (r["turn_idx"], r["unit_idx"], r["kind"],
+                r["section_label"], r["char_start"], r["char_end"],
+                r["clean_text"])
+
+    want_null = sorted(key(r)[1:] for r in base if r["turn_idx"] == hit)
+    assert want_null
+    assert sorted(key(r)[1:] for r in got if r["turn_idx"] is None) \
+        == want_null
+    assert sorted(key(r) for r in got if r["turn_idx"] is not None) \
+        == sorted(key(r) for r in base if r["turn_idx"] != hit)
+
+
 def test_spans_cover_section_content(spark, turns, reference_modules):
     """Every canonical section's text in the document record is composed
     of span unit texts (joined per reference A1 semantics)."""

@@ -61,14 +61,6 @@ def test_rolling_fingerprint_locality(spark):
     assert fp[1] != fp[2]
 
 
-def test_fuzzy_helpers():
-    assert TS.positional_char_match("abcd", "abcd") == 1.0
-    assert TS.positional_char_match("abcd", "abcx") == 0.75
-    assert TS.positional_char_match("", "") == 1.0
-    assert TS.positional_char_match("a", "") == 0.0
-    assert TS.fuzzy_ratio("hello world", "hello wurld") > 0.8
-
-
 def test_quality_score_bounds(docs):
     scores = [r["v"] for r in docs.select(
         "doc_id", TS.quality_score(F.col("text")).alias("v")).collect()]
