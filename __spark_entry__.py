@@ -29,7 +29,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from paperslicer_spark.functions.sections import (
-    canonical_section_col,
     exact_map,
     methods_keywords,
     intro_keywords,
@@ -453,9 +452,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["x15_ivf_topk"] = x15_ivf_topk
 
     def x16_sections_direct(spark, sf):
-        from paperslicer_spark.operators.extract import extract_sections_direct
+        # the parity reference (salted agg assembly → record parse) under
+        # an oracle; x22 is the same rows from the fused sections path
         docs = assemble_documents(_synth_turns(spark), skew_threshold=20)
-        return extract_sections_direct(docs).orderBy("conv_id", "section_label")
+        return sections_long(parse_documents(docs)) \
+            .orderBy("conv_id", "section_label")
     q["x16_sections_direct"] = x16_sections_direct
 
     def x17_truth_validation(spark, sf):
@@ -2005,8 +2006,8 @@ FROM documents GROUP BY source, lang
 SELECT conv_id, section_label, clean_text, is_canonical
 FROM '{_FIX}/rec_sections.parquet'
 """
-    # x16/x22 are row-identical to x01 by construction (explode inside
-    # vs outside the fused UDF) — same reproduction oracle
+    # x16 (agg-assembly reference) and x22 (fused sections path) are
+    # row-identical to x01 by construction — same reproduction oracle
     o["x16_sections_direct"] = o["x01_extract_sections"]
     o["x22_sections_fused"] = o["x01_extract_sections"]
     o["x05_turn_spans"] = f"""

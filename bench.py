@@ -22,8 +22,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F
-
 import __spark_entry__ as entrymod
 from paperslicer_spark.operators.assemble import assemble_documents
 from paperslicer_spark.operators.extract import parse_documents, sections_long
@@ -83,8 +81,7 @@ def main():
     # flagship document pipeline: fused no-shuffle parse on the conv-
     # aligned layout (this corpus is generated bucketed-by-conversation,
     # like the 100 TB Iceberg deployment; parse_turns_fused docstring)
-    from paperslicer_spark.operators.extract import (
-        extract_sections_direct, parse_turns_fused)
+    from paperslicer_spark.operators.extract import parse_turns_fused
     timed("extract_records",
           lambda: force(sections_long(
               parse_turns_fused(turns, conv_aligned=True))))
@@ -93,9 +90,6 @@ def main():
     timed("extract_records_salted_agg",
           lambda: force(sections_long(
               parse_documents(assemble_documents(turns, skew_threshold=64)))))
-    timed("extract_sections_direct",
-          lambda: force(extract_sections_direct(
-              assemble_documents(turns, skew_threshold=64))))
     # minimal-bytes path: sections-only, assembly+parse+explode in-UDF
     from paperslicer_spark.operators.extract import extract_sections_fused
     timed("extract_sections_fused",

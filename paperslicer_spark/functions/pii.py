@@ -18,7 +18,7 @@ tokenization changes.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 # RE2-safe patterns (shared verbatim with the DuckDB oracle via
 # PII_PATTERNS — never inline-edit one side)

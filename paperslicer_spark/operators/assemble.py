@@ -67,14 +67,14 @@ def _per_class(t: DataFrame) -> DataFrame:
     )
 
 
-def _salted_blocks(t: DataFrame, salt_blocks: int) -> DataFrame:
+def _salted_blocks(t: DataFrame, block: int) -> DataFrame:
     """Phase 1 for skewed conversations: pre-concatenate per
     (conv_id, class, turn block) so the final per-conv group is tiny."""
     return (
         t.groupBy(
             "conv_id",
             "frag_class",
-            (F.col("pos") / F.lit(salt_blocks)).cast("int").alias("blk"),
+            (F.col("pos") / F.lit(block)).cast("int").alias("blk"),
         )
         .agg(
             _ordered_concat(
@@ -85,15 +85,16 @@ def _salted_blocks(t: DataFrame, salt_blocks: int) -> DataFrame:
     )
 
 
-def assemble_documents(turns: DataFrame, salt_blocks: int = 0,
+def assemble_documents(turns: DataFrame,
                        skew_threshold: int | None = None) -> DataFrame:
-    """Assemble ``(conv_id, payload)`` from transcript turns.
+    """Assemble ``(conv_id, payload)`` from transcript turns — with
+    ``parse_documents`` the parity reference of the fused extraction
+    paths (operators/extract.py), which assemble inside their parse UDF
+    instead.
 
     ``skew_threshold``: when set, conversations with more than this
-    many turns are routed through the salted two-phase path (block
-    size = ``salt_blocks`` or the threshold); the rest go direct.
-    ``salt_blocks`` > 0 with no threshold forces the two-phase path
-    for ALL conversations (correctness-testing / worst-case mode).
+    many turns are routed through the salted two-phase path in blocks
+    of ``skew_threshold`` turns; the rest go direct.
     """
     t = turns.select(
         "conv_id",
@@ -103,7 +104,6 @@ def assemble_documents(turns: DataFrame, salt_blocks: int = 0,
     ).where(F.col("text").isNotNull() & (F.length("text") > 0))
 
     if skew_threshold:
-        block = salt_blocks if salt_blocks and salt_blocks > 0 else skew_threshold
         # Skew probe over RAW turns, not the text-filtered view: the
         # routing decision doesn't change the output (salted and direct
         # paths produce identical payloads — parity-tested), and raw
@@ -121,9 +121,7 @@ def assemble_documents(turns: DataFrame, salt_blocks: int = 0,
         normal = flagged.where(F.col("_skew").isNull()).drop("_skew")
         skewed = flagged.where(F.col("_skew").isNotNull()).drop("_skew")
         per_class = _per_class(normal).unionByName(
-            _per_class(_salted_blocks(skewed, block)))
-    elif salt_blocks and salt_blocks > 0:
-        per_class = _per_class(_salted_blocks(t, salt_blocks))
+            _per_class(_salted_blocks(skewed, skew_threshold)))
     else:
         per_class = _per_class(t)
 

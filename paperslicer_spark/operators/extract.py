@@ -16,6 +16,11 @@ emitters here, the streaming assembler — turns that text into a
 ``status='error'`` row (sections: an ``__error__`` row), never a task
 failure: at 10^12-turn scale one malformed payload must not kill a
 stage.
+
+One batch path per output: ``parse_turns_fused`` (records) and
+``extract_sections_fused`` (sections) over raw turns.
+``parse_documents(assemble_documents(...))`` is the parity reference
+both are tested against.
 """
 
 from __future__ import annotations
@@ -152,7 +157,7 @@ def _payload_docs(pairs, merge_tables, review_mode):
                                           review_mode))
 
 
-def _turn_docs(pairs, merge_tables, review_mode, max_turns):
+def _turn_docs(pairs, review_mode, max_turns):
     """Sorted ``(conv_id, text)`` turn pairs → ``(conv_id, record,
     error)``, one per conversation."""
     for conv_id, frags in iter_conversations(pairs, max_turns):
@@ -160,7 +165,7 @@ def _turn_docs(pairs, merge_tables, review_mode, max_turns):
             yield conv_id, None, f"oversized: > {max_turns} turns"
         else:
             yield (conv_id, *extract_document(
-                conv_id, assemble_payload(frags), merge_tables, review_mode))
+                conv_id, assemble_payload(frags), True, review_mode))
 
 
 def _records(df: DataFrame, value_col: str, docs, *args) -> DataFrame:
@@ -240,8 +245,7 @@ def check_conv_alignment(turns: DataFrame) -> int:
     )
 
 
-def parse_turns_fused(turns: DataFrame, merge_tables: bool = True,
-                      review_mode: Optional[bool] = None,
+def parse_turns_fused(turns: DataFrame, review_mode: Optional[bool] = None,
                       conv_aligned: bool = False,
                       partitions: Optional[int] = None,
                       max_turns_per_conv: Optional[int] = None) -> DataFrame:
@@ -280,16 +284,14 @@ def parse_turns_fused(turns: DataFrame, merge_tables: bool = True,
 
     Long-conversation skew: a 1000× conversation is one Python group
     inside one task (bounded by its own payload size), never a hot
-    reducer materializing a 10^5-element array — the skew-split salted
-    agg remains available in assemble_documents for sources where even
-    single payloads must be pre-reduced. ``max_turns_per_conv`` is the
-    worker-memory guardrail for adversarial inputs: a conversation
-    exceeding it becomes a ``status='error'`` row with error
-    ``"oversized: > N turns"`` (``iter_conversations``), never a task
-    OOM.
+    reducer materializing a 10^5-element array. ``max_turns_per_conv``
+    is the worker-memory guardrail for adversarial inputs: a
+    conversation exceeding it becomes a ``status='error'`` row with
+    error ``"oversized: > N turns"`` (``iter_conversations``), never a
+    task OOM.
     """
     return _records(_sorted_turns(turns, conv_aligned, partitions), "text",
-                    _turn_docs, merge_tables, review_mode, max_turns_per_conv)
+                    _turn_docs, review_mode, max_turns_per_conv)
 
 
 SECTIONS_SCHEMA = (
@@ -298,20 +300,29 @@ SECTIONS_SCHEMA = (
 )
 
 
-# Marker label for error-document rows from the sections-only paths
+# Marker label for error-document rows from the sections-only path
 # (emit_errors=True): at corpus scale "the sections output is silently
 # smaller than the corpus" is an operational trap — the marker row
 # keeps per-document accounting possible on the minimal-bytes path.
 ERROR_SECTION_LABEL = "__error__"
 
 
-def _sections(df: DataFrame, value_col: str, emit_errors: bool, docs,
-              *args) -> DataFrame:
-    """The sections emitter: ``docs`` as in ``_records``; each record
-    explodes into its canonical then its other sections, so only flat
-    strings cross the Arrow boundary. An error yields no row, or with
-    ``emit_errors`` one ``__error__`` row (clean_text = the error text,
-    is_canonical = false)."""
+def section_rows(rec: dict) -> list:
+    """A record's long-form section rows ``(section_label, clean_text,
+    is_canonical)``: its canonical entries, then its other sections.
+    ``sections_long`` is the same rule in JVM form."""
+    return ([(k, v, True) for k, v in rec["sections"].items()]
+            + [(k, v, False) for k, v in rec["other_sections"].items()])
+
+
+def _sections(df: DataFrame, emit_errors: bool,
+              review_mode: Optional[bool],
+              max_turns: Optional[int]) -> DataFrame:
+    """The sections emitter: ``_turn_docs`` over the stage's sorted
+    ``(conv_id, text)`` turn pairs; each record explodes into its
+    ``section_rows``, so only flat strings cross the Arrow boundary.
+    An error yields no row, or with ``emit_errors`` one ``__error__``
+    row (clean_text = the error text, is_canonical = false)."""
 
     def run(batches) -> Iterator["pa.RecordBatch"]:
         import pyarrow as pa
@@ -331,13 +342,10 @@ def _sections(df: DataFrame, value_col: str, emit_errors: bool, docs,
 
         pairs = (p for b in batches
                  for p in zip(b.column("conv_id").to_pandas().tolist(),
-                              b.column(value_col).to_pandas().tolist()))
-        for conv_id, rec, err in docs(pairs, *args):
+                              b.column("text").to_pandas().tolist()))
+        for conv_id, rec, err in _turn_docs(pairs, review_mode, max_turns):
             if err is None:
-                rows += [(conv_id, k, v, True)
-                         for k, v in rec["sections"].items()]
-                rows += [(conv_id, k, v, False)
-                         for k, v in rec["other_sections"].items()]
+                rows += [(conv_id, *r) for r in section_rows(rec)]
             elif emit_errors:
                 rows.append((conv_id, ERROR_SECTION_LABEL, err, False))
             if len(rows) >= _SECTION_FLUSH:
@@ -348,28 +356,7 @@ def _sections(df: DataFrame, value_col: str, emit_errors: bool, docs,
     return df.mapInArrow(run, schema=SECTIONS_SCHEMA)
 
 
-def extract_sections_direct(docs: DataFrame, merge_tables: bool = True,
-                            review_mode: Optional[bool] = None,
-                            emit_errors: bool = False) -> DataFrame:
-    """``(conv_id, payload)`` → long-form sections rows directly.
-
-    Row-equivalent to ``sections_long(parse_documents(docs))`` but the
-    explode happens inside the UDF, so only flat string rows cross the
-    Arrow boundary — no nested record structs. Use when downstream
-    needs only sections (the common 100 TB case); the full record
-    stage remains the source of figures/tables/references/meta.
-
-    ``emit_errors=True`` emits one ``section_label='__error__'`` row
-    per failed document (clean_text = the error message,
-    is_canonical = false) so corpus-size accounting survives this
-    path; the default False keeps exact row parity with
-    ``sections_long(parse_documents(...))``, which drops error docs.
-    """
-    return _sections(docs.select("conv_id", "payload"), "payload",
-                     emit_errors, _payload_docs, merge_tables, review_mode)
-
-
-def extract_sections_fused(turns: DataFrame, merge_tables: bool = True,
+def extract_sections_fused(turns: DataFrame,
                            review_mode: Optional[bool] = None,
                            conv_aligned: bool = False,
                            partitions: Optional[int] = None,
@@ -393,9 +380,8 @@ def extract_sections_fused(turns: DataFrame, merge_tables: bool = True,
     ``conv_aligned=True`` has the same layout contract as
     ``parse_turns_fused`` — see its docstring for the file-split
     caveat (bucket files must not be split across tasks)."""
-    return _sections(_sorted_turns(turns, conv_aligned, partitions), "text",
-                     emit_errors, _turn_docs, merge_tables, review_mode,
-                     max_turns_per_conv)
+    return _sections(_sorted_turns(turns, conv_aligned, partitions),
+                     emit_errors, review_mode, max_turns_per_conv)
 
 
 def sections_long(records: DataFrame) -> DataFrame:

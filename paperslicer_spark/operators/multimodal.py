@@ -25,7 +25,7 @@ from __future__ import annotations
 import struct
 from typing import Iterator
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 ASSET_SCHEMA = (
     "asset_id long, conv_id string, kind string, payload binary, "

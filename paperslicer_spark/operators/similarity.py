@@ -109,7 +109,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     ``list_id`` expresses the same pruning.
     """
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
     from pyspark.sql import Window
 
     feat = corpus.select(

@@ -22,15 +22,15 @@ maxRecordsPerBatch`` (multi-KB payload strings — see session.py).
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional
+from typing import Iterator, List
 
 from xml.etree import ElementTree as ET
 
 from pyspark.sql import DataFrame
 
 from paperslicer_spark.extraction.tei import (
-    T, T_AB, T_DIV, T_FIGDESC, T_FIGURE, T_HEAD, T_P, T_TABLE, _P_AB,
-    normalize_space, _txt)
+    T_DIV, T_FIGDESC, T_FIGURE, T_HEAD, T_TABLE, _P_AB, normalize_space,
+    _txt)
 from paperslicer_spark.functions.sections import canonical_section_name
 
 SPAN_SCHEMA = (
@@ -196,7 +196,8 @@ def clean_turns(turns: DataFrame) -> DataFrame:
                 oks.append(ok)
             yield pd.DataFrame({
                 "conv_id": pdf["conv_id"].values,
-                "turn_idx": pdf["turn_idx"].astype("int32").values,
+                # nullable: a NULL turn_idx stays NULL, not a task failure
+                "turn_idx": pdf["turn_idx"].astype("Int32").values,
                 "clean_text": cleans, "n_units": n_units, "parse_ok": oks,
             })
 

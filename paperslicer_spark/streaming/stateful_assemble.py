@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from paperslicer_spark.operators.extract import (
-    ERROR_SECTION_LABEL, extract_document)
+    ERROR_SECTION_LABEL, extract_document, section_rows)
 from paperslicer_spark.sources.transcripts import assemble_payload
 
 STATE_SCHEMA = "turn_idxs array<int>, texts array<string>, emitted boolean"
@@ -84,14 +84,11 @@ def _emit_sections(conv_id: str, turn_idxs, texts, status: str) -> pd.DataFrame:
     if err:
         rows = [(conv_id, "error", ERROR_SECTION_LABEL, err, False)]
     else:
-        rows = [(conv_id, status, k, v, True)
-                for k, v in rec["sections"].items()]
-        rows += [(conv_id, status, k, v, False)
-                 for k, v in rec["other_sections"].items()]
+        rows = [(conv_id, status, *r) for r in section_rows(rec)]
     if not rows and status != "ok":
         # oversized/timeout conversations with nothing parseable still
         # leave one accounting row — same rationale as the batch
-        # paths' emit_errors marker
+        # path's emit_errors marker
         rows = [(conv_id, status, None, None, None)]
     return pd.DataFrame(rows, columns=["conv_id", "status",
                                        "section_label", "clean_text",

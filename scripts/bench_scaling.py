@@ -71,8 +71,6 @@ def corpus(spark) -> str:
 
 
 def worker(cores: int) -> None:
-    from pyspark.sql import functions as F
-
     from paperslicer_spark.operators.assemble import assemble_documents
     from paperslicer_spark.operators.extract import (
         parse_documents, parse_turns_fused, sections_long)

@@ -3,7 +3,7 @@
 Usage: python scripts/dump_plans.py <round> <tag> [name ...]
 
 Writes plans/<round>/<name>_<tag>.txt (e.g. ``r07 before``) for each
-bench entry (the 5 extraction paths + the 10 registered bench
+bench entry (the 4 extraction entries + the 10 registered bench
 queries) plus any extra registered query names passed on the command
 line. Read-only — plans are captured without executing the queries.
 """
@@ -18,7 +18,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod
 from paperslicer_spark.operators.assemble import assemble_documents
 from paperslicer_spark.operators.extract import (
-    extract_sections_direct,
     extract_sections_fused,
     parse_documents,
     parse_turns_fused,
@@ -59,8 +58,6 @@ def main():
             parse_turns_fused(turns, conv_aligned=True)),
         "extract_records_salted_agg": lambda: sections_long(
             parse_documents(assemble_documents(turns, skew_threshold=64))),
-        "extract_sections_direct": lambda: extract_sections_direct(
-            assemble_documents(turns, skew_threshold=64)),
         "extract_sections_fused": lambda: extract_sections_fused(
             turns, conv_aligned=True),
     }

@@ -7,7 +7,7 @@ Cluster usage::
         scripts/run_extract.py \\
         --input  s3://bucket/transcripts \\
         --output s3://bucket/extracted \\
-        --buckets 4096 --salt-blocks 1024
+        --buckets 4096
 
 Local smoke::
 
@@ -37,20 +37,13 @@ def main() -> None:
                     help="generate N synthetic conversations instead of --input")
     ap.add_argument("--buckets", type=int, default=16,
                     help="resume granularity (conv_id hash buckets)")
-    ap.add_argument("--salt-blocks", type=int, default=64,
-                    help="turns per salt block for skewed conversations")
     ap.add_argument("--review-mode", choices=["auto", "on", "off"],
                     default="auto")
-    ap.add_argument("--assembly", choices=["fused", "salted-agg"],
-                    default="fused",
-                    help="fused = no-payload-shuffle parse (default); "
-                         "salted-agg = two-phase salted aggregation path")
     args = ap.parse_args()
 
     from paperslicer_spark.session import get_spark
-    from paperslicer_spark.operators.assemble import assemble_documents
     from paperslicer_spark.operators.extract import (
-        parse_documents, parse_turns_fused, sections_long)
+        parse_turns_fused, sections_long)
     from paperslicer_spark.operators.metrics import (
         corpus_quality, partition_lineage, per_document_metrics)
     from paperslicer_spark.operators.sinks import write_per_document_csv
@@ -66,15 +59,8 @@ def main() -> None:
 
     review = {"auto": None, "on": True, "off": False}[args.review_mode]
 
-    def records_of(part):
-        if args.assembly == "fused":
-            return parse_turns_fused(part, review_mode=review)
-        return parse_documents(
-            assemble_documents(part, skew_threshold=args.salt_blocks),
-            review_mode=review)
-
     def transform(part):
-        return sections_long(records_of(part))
+        return sections_long(parse_turns_fused(part, review_mode=review))
 
     summary = run_with_resume(spark, turns, args.output, transform,
                               n_buckets=args.buckets)
@@ -83,7 +69,7 @@ def main() -> None:
     spans = extract_turn_spans(turns)
     partition_lineage(spans).write.mode("overwrite").parquet(
         os.path.join(args.output, "lineage"))
-    records = records_of(turns)
+    records = parse_turns_fused(turns, review_mode=review)
     corpus_quality(records).write.mode(
         "overwrite").parquet(os.path.join(args.output, "quality"))
     write_per_document_csv(per_document_metrics(records),

@@ -1,5 +1,6 @@
 """Every public top-level def or class in ``paperslicer_spark/`` must be
-named somewhere in non-test code, or sit in ``KEEP`` with its reason.
+named somewhere in non-test code, or sit in ``KEEP`` with its reason;
+and no non-test module imports a name it never uses.
 
 Spark-free: an AST scan, no import of the package. "Named" means a
 ``Name``, an ``Attribute`` or an imported alias — docstrings and
@@ -67,6 +68,9 @@ KEEP = {
         "deletion deferred (test_mixture, test_r6_oracle_drafts)",
     "paperslicer_spark.operators.metrics.cohen_kappa":
         "deletion deferred (test_boilerplate_kappa, test_r6_oracle_drafts)",
+    "paperslicer_spark.functions.sections.canonical_section_col":
+        "deletion deferred (test_sections_mapping::test_spark_column_variant;"
+        " its one non-test name was an unused import)",
 }
 
 
@@ -109,3 +113,49 @@ def test_every_public_def_is_reached_or_kept():
         f"to KEEP with a reason: {unreached}")
     stale = sorted(q for q in KEEP if q not in defs or defs[q] in used)
     assert not stale, f"KEEP entries that are gone or now reached: {stale}"
+
+
+# perfbench/ is the benchmark's own code and changes only with it
+IMPORT_ROOTS = [r for r in NON_TEST if r.name != "perfbench"]
+
+
+def _annotation_names(tree: ast.AST) -> set:
+    """Names inside string annotations such as ``"pa.RecordBatch"``."""
+    notes = []
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            args = node.args
+            notes += [a.annotation for a in (
+                args.posonlyargs + args.args + args.kwonlyargs
+                + [args.vararg, args.kwarg]) if a is not None]
+            notes.append(node.returns)
+        elif isinstance(node, ast.AnnAssign):
+            notes.append(node.annotation)
+    names = set()
+    for note in filter(None, notes):
+        for c in ast.walk(note):
+            if isinstance(c, ast.Constant) and isinstance(c.value, str):
+                names |= {n.id for n in ast.walk(ast.parse(c.value, mode="eval"))
+                          if isinstance(n, ast.Name)}
+    return names
+
+
+def _unused_imports(tree: ast.AST) -> list:
+    bound = {}
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            if getattr(node, "module", None) == "__future__":
+                continue
+            for alias in node.names:
+                bound[alias.asname or alias.name.split(".")[0]] = node.lineno
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    used |= _annotation_names(tree)
+    return sorted((line, name) for name, line in bound.items()
+                  if name not in used)
+
+
+def test_no_unused_imports():
+    unused = [f"{path.relative_to(ROOT)}:{line} {name}"
+              for root in IMPORT_ROOTS for path in _py_files(root)
+              for line, name in _unused_imports(ast.parse(path.read_text()))]
+    assert not unused, f"imported but never used: {unused}"

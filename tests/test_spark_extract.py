@@ -51,8 +51,12 @@ def test_assembly_matches_reference_rule(turns, expected_payloads):
 
 
 def test_salted_assembly_identical(turns, expected_payloads):
+    """Every test conversation has more than 4 turns, so all of them
+    take the salted path, in blocks of 4 — payloads must be identical."""
+    counts = [r["count"] for r in turns.groupBy("conv_id").count().collect()]
+    assert len(counts) == N_DOCS and min(counts) > 4
     got = {r["conv_id"]: r["payload"]
-           for r in assemble_documents(turns, salt_blocks=4).collect()}
+           for r in assemble_documents(turns, skew_threshold=4).collect()}
     assert got == expected_payloads
 
 
@@ -60,8 +64,7 @@ def test_skew_split_assembly_identical(turns, expected_payloads):
     """Threshold chosen so the corpus's skewed conversations take the
     salted path while the rest go direct — results must be identical."""
     got = {r["conv_id"]: r["payload"]
-           for r in assemble_documents(turns, salt_blocks=8,
-                                       skew_threshold=20).collect()}
+           for r in assemble_documents(turns, skew_threshold=20).collect()}
     assert got == expected_payloads
     n_skewed = sum(1 for r in
                    turns.groupBy("conv_id").count().collect()
@@ -74,8 +77,8 @@ def test_record_parity_spark_vs_reference(spark, turns, reference_modules):
     ref_parser, _, _ = reference_modules
     from paperslicer_spark.extraction.merge import merge_table_entries
 
-    docs = assemble_documents(turns, salt_blocks=8)
-    records = parse_documents(docs, merge_tables=True, review_mode=False)
+    docs = assemble_documents(turns, skew_threshold=8)
+    records = parse_documents(docs, review_mode=False)
     rows = {r["conv_id"]: r.asDict(recursive=True) for r in records.collect()}
     assert len(rows) == N_DOCS
     assert all(r["status"] == "ok" for r in rows.values())
@@ -184,6 +187,26 @@ def test_spans_null_turn_idx(spark, turns):
         == want_null
     assert sorted(key(r) for r in got if r["turn_idx"] is not None) \
         == sorted(key(r) for r in base if r["turn_idx"] != hit)
+
+
+def test_clean_turns_null_turn_idx(spark, turns):
+    """clean_turns keeps a NULL turn_idx as NULL instead of failing the
+    task; every other row is unchanged (one Arrow batch, as above)."""
+    from pyspark.sql import functions as F
+
+    conv = turns.where(F.col("conv_id") == "conv00000000").coalesce(1)
+    base = clean_turns(conv).collect()
+    hit = base[0]["turn_idx"]
+    nulled = conv.withColumn(
+        "turn_idx", F.when(F.col("turn_idx") != hit, F.col("turn_idx"))
+        .cast("int"))
+    got = clean_turns(nulled).collect()
+
+    assert [r.asDict() for r in got if r["turn_idx"] is None] \
+        == [dict(r.asDict(), turn_idx=None) for r in base
+            if r["turn_idx"] == hit]
+    assert sorted(map(tuple, (r for r in got if r["turn_idx"] is not None))) \
+        == sorted(map(tuple, (r for r in base if r["turn_idx"] != hit)))
 
 
 def test_spans_cover_section_content(spark, turns, reference_modules):
@@ -402,8 +425,7 @@ def test_sections_error_visibility(spark):
     so sections-path doc coverage equals the records path's total
     (ok + error) document count."""
     from paperslicer_spark.operators.extract import (
-        ERROR_SECTION_LABEL, extract_sections_direct,
-        extract_sections_fused, parse_turns_fused)
+        ERROR_SECTION_LABEL, extract_sections_fused, parse_turns_fused)
 
     rows = [
         ("bad", 0, "tool", "not xml <<<", "gen", None),
@@ -419,14 +441,11 @@ def test_sections_error_visibility(spark):
     records = parse_turns_fused(turns).collect()
     n_docs = len(records)
 
-    fused = extract_sections_fused(turns, emit_errors=True, partitions=2)
-    covered = {r["conv_id"] for r in fused.collect()}
+    fused = extract_sections_fused(turns, emit_errors=True,
+                                   partitions=2).collect()
+    covered = {r["conv_id"] for r in fused}
     assert len(covered) == n_docs == 2
-
-    docs = assemble_documents(turns)
-    direct = extract_sections_direct(docs, emit_errors=True).collect()
-    assert {r["conv_id"] for r in direct} == covered
-    err_rows = [r for r in direct if r["section_label"] == ERROR_SECTION_LABEL]
+    err_rows = [r for r in fused if r["section_label"] == ERROR_SECTION_LABEL]
     assert len(err_rows) == 1 and err_rows[0]["conv_id"] == "bad"
     assert "Error" in err_rows[0]["clean_text"] or ":" in err_rows[0]["clean_text"]
 
@@ -435,18 +454,12 @@ def test_sections_error_visibility(spark):
     assert {r["conv_id"] for r in silent} == {"good"}
 
 
-def test_sections_direct_equals_records_path(spark, turns):
-    from paperslicer_spark.operators.extract import (
-        extract_sections_direct, extract_sections_fused)
+def test_sections_fused_equals_records_path(spark, turns):
+    from paperslicer_spark.operators.extract import extract_sections_fused
 
     docs = assemble_documents(turns)
-    via_records = sections_long(
-        parse_documents(docs, merge_tables=True, review_mode=None))
-    direct = extract_sections_direct(docs, merge_tables=True, review_mode=None)
+    via_records = sections_long(parse_documents(docs, review_mode=None))
     a = sorted(map(tuple, via_records.collect()))
-    b = sorted(map(tuple, direct.collect()))
-    assert a == b
-    fused = extract_sections_fused(turns, merge_tables=True,
-                                   review_mode=None, partitions=5)
+    fused = extract_sections_fused(turns, review_mode=None, partitions=5)
     c = sorted(map(tuple, fused.collect()))
     assert a == c
