@@ -16,9 +16,9 @@ from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
-# the heap measured best for this workload at local[32]: an oversized
-# heap measurably HURTS on this kernel (longer GC scans + page-zeroing
-# sys time), the 1g JVM default GC-thrashes under 32 executor threads
+# the heap ceiling measured best for this workload at local[32]
+# (round 6): a larger heap there meant longer GC scans, and the 1g JVM
+# default GC-thrashed under 32 executor threads
 MAX_DRIVER_HEAP_MIB = 8 * 1024
 
 _UNIT_MIB = {"m": 1, "g": 1024, "t": 1024 ** 2}
@@ -62,11 +62,11 @@ def _heap_mib(size: str) -> int:
 
 
 def host_heap(ram_bytes: int | None = None) -> str:
-    """Driver heap sized to the host: min(8g, physical RAM / 4).
+    """Driver heap ceiling sized to the host: min(8g, physical RAM / 4).
 
-    The heap is pre-touched, so all of it is resident from start-up.
-    A quarter of RAM leaves room for a second session (a test run and
-    the CLI subprocess it starts) plus both sessions' Python workers.
+    The heap grows to its working set up to this ceiling, and a quarter
+    of RAM leaves room for a second session (a test run and the CLI
+    subprocess it starts) plus both sessions' Python workers at theirs.
     """
     if ram_bytes is None:
         ram_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
@@ -79,8 +79,8 @@ def session_confs(extra_confs: dict | None = None,
     """Every conf ``get_spark`` sets except the shuffle partitions.
 
     The driver heap is ``spark.driver.memory`` from ``extra_confs``,
-    else ``SPARK_DRIVER_MEMORY``, else :func:`host_heap`; ``-Xms`` and
-    ``maxResultSize`` follow that final value.
+    else ``SPARK_DRIVER_MEMORY``, else :func:`host_heap`;
+    ``maxResultSize`` follows that final value.
     """
     extra_confs = extra_confs or {}
     heap = extra_confs.get("spark.driver.memory",
@@ -91,12 +91,11 @@ def session_confs(extra_confs: dict | None = None,
         # half the heap: a cap at or above the heap could never fire
         # before the driver itself runs out of memory
         "spark.driver.maxResultSize": f"{mib // 2}m",
-        # -Xms=-Xmx + pre-touch: dynamic heap growth on this kernel
-        # spends whole seconds in page-zeroing system time mid-job
-        # (measured: a 32-core run degraded 6s → 110s without it;
-        # stable 6s with it)
-        "spark.driver.extraJavaOptions": (
-            f"-Xms{mib}m -XX:+AlwaysPreTouch -XX:+UseG1GC"),
+        # the heap grows to its working set: on 4 cores/15 GB a pre-
+        # touched 4017m heap held spans_map peak RSS at 5460 MB vs 2218
+        # MB, at the same rows/s (perfbench medians, 10 pairs). It paid
+        # only at local[32], round 6 (6 s → 110 s without it)
+        "spark.driver.extraJavaOptions": "-XX:+UseG1GC",
         **DEFAULT_CONFS,
         **extra_confs,
     }

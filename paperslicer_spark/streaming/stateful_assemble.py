@@ -48,9 +48,11 @@ OUTPUT_SCHEMA = (
 
 
 def _extract(conv_id: str, turn_idxs, texts):
-    """``extract_document`` over the fragments in turn order, with no
-    table merge and no review profile (streaming's semantics)."""
-    frags = [t for _, t in sorted(zip(turn_idxs, texts))]
+    """``extract_document`` over the fragments in ``_turn_docs``' order
+    (NULL ``turn_idx`` first, ties by text), with no table merge and no
+    review profile (streaming's semantics)."""
+    frags = [t for _, _, t in sorted(
+        (ti is not None, ti or 0, tx) for ti, tx in zip(turn_idxs, texts))]
     return extract_document(conv_id, assemble_payload(frags),
                             merge_tables=False, review_mode=False)
 
@@ -145,7 +147,7 @@ def _stateful_fn(emit, max_turns_per_conv=None):
             for ti, tx in zip(pdf["turn_idx"], pdf["text"]):
                 if tx is None or over:
                     continue
-                turn_idxs.append(int(ti))
+                turn_idxs.append(None if pd.isna(ti) else int(ti))
                 texts.append(tx)
                 if tx.startswith("<back"):
                     complete = True

@@ -22,11 +22,10 @@ Four jobs are measured:
                 because its agg stage is the documented non-scaling
                 term the fused path removes
 
-Both legs run the IDENTICAL JVM config (8 GB pre-touched heap — the
-measured sweet spot; a scaled 32 GB heap costs whole-minute page-
-zeroing startup and 2.5× runtime on this kernel) so the comparison
-isolates parallelism, exactly as a real cluster holds per-executor
-memory constant while adding executors.
+Both legs run the IDENTICAL JVM config (the 8 GB heap ceiling measured
+best at local[32] in round 6) so the comparison isolates parallelism,
+exactly as a real cluster holds per-executor memory constant while
+adding executors.
 
 Usage:
   python scripts/bench_scaling.py              # orchestrate both runs
@@ -88,8 +87,7 @@ def worker(cores: int) -> None:
     def force(df):
         df.write.format("noop").mode("overwrite").save()
 
-    # warm-up (JIT, Python workers, shuffle paths) — excluded; the
-    # first heavy job in a session additionally pays heap pre-touch
+    # warm-up (JIT, Python workers, shuffle paths, heap growth): excluded
     force(extract_turn_spans(turns.limit(5000)))
     force(sections_long(parse_turns_fused(turns.sample(0.05, seed=7))))
     if "agg" in JOBS:

@@ -76,6 +76,47 @@ def test_stateful_assembly_tombstone(spark, tmp_path):
     assert [(r["conv_id"], r["status"]) for r in rows] == [("cx", "ok")]
 
 
+def test_stateful_null_turn_idx_stream(spark, tmp_path):
+    """A NULL ``turn_idx`` is a turn like any other: the streaming query
+    keeps running and emits the conversation once, its fragments in the
+    batch paths' order (NULL first, ties by text)."""
+    import datetime
+
+    import pandas as pd
+
+    from paperslicer_spark.operators.extract import parse_turns_fused
+    from paperslicer_spark.streaming.stateful_assemble import assemble_stream
+    from paperslicer_spark.streaming.stream_extract import stream_turns
+
+    src = tmp_path / "turns"
+    src.mkdir()
+    ts = datetime.datetime(2025, 1, 1)
+    pdf = pd.DataFrame([
+        ("cn", 0, "tool",
+         "<teiHeader><fileDesc><titleStmt><title>N</title></titleStmt>"
+         "</fileDesc></teiHeader>", "gen", ts),
+        ("cn", None, "tool", "<div><head>Methods</head><p>m.</p></div>",
+         "gen", ts),
+        ("cn", 2, "tool", "<back></back>", "gen", ts),
+    ], columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
+    pdf["turn_idx"] = pdf["turn_idx"].astype("Int32")
+    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    pdf.to_parquet(src / "b1.parquet")
+
+    q = (assemble_stream(stream_turns(spark, str(src))).writeStream
+         .format("memory").queryName("null_idx_mem").outputMode("append")
+         .option("checkpointLocation", str(tmp_path / "ck")).start())
+    q.processAllAvailable()
+    q.stop()
+    rows = spark.sql("select * from null_idx_mem").collect()
+    assert [(r["conv_id"], r["status"], r["n_turns"]) for r in rows] == [
+        ("cn", "ok", 3)]
+    batch = parse_turns_fused(spark.read.parquet(str(src))).collect()[0]
+    assert rows[0]["title"] == batch["title"]
+    assert rows[0]["n_sections"] == (len(batch["sections"])
+                                     + len(batch["other_sections"]))
+
+
 class _FakeState:
     """Minimal GroupState double for driving _stateful_fn directly —
     processing-time timeouts never settle under processAllAvailable()
@@ -243,6 +284,32 @@ def test_stateful_parse_error_matches_batch_error_text(spark):
         "conv_id": "bad", "status": "error",
         "section_label": ERROR_SECTION_LABEL, "clean_text": want,
         "is_canonical": False}]
+
+
+def test_stateful_turn_order_matches_batch(spark):
+    """Fragments sort as the batch paths sort turns: ascending
+    ``turn_idx``, NULL first, ties broken by text."""
+    import pandas as pd
+
+    from paperslicer_spark.operators.extract import extract_sections_fused
+    from paperslicer_spark.streaming.stateful_assemble import (
+        _emit_sections, _stateful_fn)
+
+    frags = [(1, "<div><head>Results</head><p>r.</p></div>"),
+             (None, "<div><head>Methods</head><p>m.</p></div>"),
+             (1, "<div><head>Discussion</head><p>d.</p></div>"),
+             (2, "<back></back>")]
+    turns = spark.createDataFrame(
+        [("co", i, "tool", t, "gen", None) for i, t in frags],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    want = [(r["section_label"], r["clean_text"])
+            for r in extract_sections_fused(turns).collect()]
+    got = list(_stateful_fn(_emit_sections)(
+        ("co",), [pd.DataFrame(frags, columns=["turn_idx", "text"])],
+        _FakeState()))[0]
+    assert list(zip(got["section_label"], got["clean_text"])) == want
+    assert len(want) == 3
 
 
 def test_stateful_sections_stream(spark, corpus_path, tmp_path):
